@@ -356,14 +356,19 @@ def capped_bands(sig: DataFrame) -> DataFrame:
     the pathological allocation the cap is defending against. Both
     the stats aggregate and the filter join key on (band, band_hash),
     the same key the downstream pair join uses, so no extra exchange
-    is introduced."""
+    is introduced — provided the filter join stays a shuffle join. The
+    join is therefore pinned to the sort-merge join it already plans at
+    scale: on small inputs AQE otherwise converts it to a broadcast
+    after the stats shuffle, which costs a broadcast job at
+    construction and a second exchange by (band, band_hash) before the
+    bucket ``collect_list``."""
     ok = (
         sig.groupBy("band", "band_hash")
         .agg(F.count(F.lit(1)).alias("__bsz"))
         .where(F.col("__bsz") <= MH_BAND_CAP)
         .select("band", "band_hash")
     )
-    return sig.join(ok, ["band", "band_hash"])
+    return sig.join(ok.hint("merge"), ["band", "band_hash"])
 
 
 def overcap_buckets(sig: DataFrame) -> DataFrame:

@@ -8,18 +8,23 @@ connected components with the component labeled by its minimum id.
 Scale design (100 TB posture):
 
 - **min-label propagation + pointer jumping.** Each round does
-  (1) ``label(x) <- min(label(x), min over neighbors' labels)`` — one
-  shuffle join edge->label plus a grouped min with map-side partials —
-  then (2) ``label(x) <- label(label(x))`` (pointer jumping), another
-  equi-join. Propagation alone needs O(component diameter) rounds; the
-  jump collapses chains so convergence is O(log d) — the same
-  round-shape as the published large-star/small-star alternation
-  (Kiveris et al., "Connected Components in MapReduce and Beyond"),
-  with edges held constant instead of rewritten.
-- **Lineage is cut every round** (lazy ``localCheckpoint``, materialized
-  by the round's convergence count; on a real cluster: ``checkpoint``
-  to the cluster FS). Iterative plans otherwise grow superlinearly and
-  re-execute prior rounds.
+  (1) ``label(x) <- min over neighbors' labels``, where every node is
+  its own neighbor through a self-loop — one shuffle join edge->label
+  plus a grouped min with map-side partials — then (2)
+  ``label(x) <- label(label(x))`` (pointer jumping), another equi-join.
+  Propagation alone needs O(component diameter) rounds; the jump
+  collapses chains so convergence is O(log d) — the same round-shape
+  as the published large-star/small-star alternation (Kiveris et al.,
+  "Connected Components in MapReduce and Beyond"), with edges held
+  constant instead of rewritten.
+- **Lineage is cut every round** (lazy ``localCheckpoint`` of the
+  propagated labels, which the convergence count, the jump and the
+  return all read; on a real cluster: ``checkpoint`` to the cluster
+  FS). Iterative plans otherwise grow superlinearly and re-execute
+  prior rounds; the jumped labels feed only the next round, so they
+  need no cut of their own. Under AQE a lazy checkpoint still runs
+  every shuffle stage below it as its own job while the DataFrame is
+  built, so each join or grouped min costs a job at construction.
 - **Convergence is a scalar aggregate** (count of changed labels), not
   a driver collect of the label table.
 
@@ -51,97 +56,55 @@ def connected_components(
     back as singletons — cheaper than unioning the full vertex set
     through every iteration).
     """
-    # symmetrize with ONE pass over the edge lineage (r13): explode a
-    # 2-array of (s,d)/(d,s) structs per edge instead of unioning two
-    # copies of the (possibly expensive, e.g. the whole MinHash ->
-    # verified-Jaccard pipeline) edge subtree — a union evaluates the
-    # subtree once per branch inside the checkpoint job
-    e = edges.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
+    # ONE pass over the edge lineage: explode each edge into (s,d),
+    # (d,s) and the self-loops (s,s), (d,d) instead of unioning copies
+    # of the (possibly expensive, e.g. the whole MinHash -> verified-
+    # Jaccard pipeline) edge subtree — a union evaluates the subtree
+    # once per branch. The self-loops put every node's own label among
+    # its neighbours' labels, so a round is one join and one grouped min.
+    s, d = F.col(src), F.col(dst)
     sym = (
-        e.select(
+        edges.select(
             F.explode(
-                F.array(
-                    F.struct(F.col("__s"), F.col("__d")),
-                    F.struct(
-                        F.col("__d").alias("__s"), F.col("__s").alias("__d")
-                    ),
-                )
+                F.array(*[F.struct(a.alias("__s"), b.alias("__d"))
+                          for a, b in ((s, d), (d, s), (s, s), (d, d))])
             ).alias("__e")
         )
-        .select(F.col("__e.__s").alias("__s"), F.col("__e.__d").alias("__d"))
-        .repartition("__d")
-        # lazy (r13): the first convergence count materializes sym,
-        # round 1 and round 2 in ONE job — the eager form paid a
-        # scheduler round-trip + serial planning pass per barrier
-        # (guide §5: localCheckpoint planning is serial driver time;
-        # the RDD is persisted by that first job and reused every
-        # later round exactly as the eager form did)
+        .select("__e.__s", "__e.__d")
+        # lazy: the round-2 checkpoint materializes it, every later
+        # round reads the persisted blocks
         .localCheckpoint(eager=False)
     )
-    labels = None
+    # round 1 fused: with init label = node, propagation is ONE grouped
+    # min over the edges (the self-loop supplies the node itself); it
+    # and its jump are materialized under round 2's checkpoint
+    prop = sym.groupBy(F.col("__s").alias("node")).agg(F.min("__d").alias("comp"))
     for it in range(max_iter):
-        if labels is None:
-            # Round 1 fused (r13): with init comp = node, the first
-            # propagation step label(x) <- min(x, min nbr) is ONE
-            # grouped aggregate over the symmetric edges — the
-            # separate distinct-node init, its eager checkpoint and
-            # the two round-1 joins all collapse into it (one shuffle
-            # instead of three, one less barrier job + planning pass).
-            upd = (
-                sym.groupBy(F.col("__s").alias("node"))
-                .agg(
-                    F.min(F.least(F.col("__s"), F.col("__d"))).alias("comp")
-                )
-                .select("node", F.col("node").alias("__old"), "comp")
-            )
-        else:
-            nbr_min = (
+        if it:
+            # round k >= 2: one join + one grouped min; the self-loop
+            # row carries the node's old label for the convergence count
+            prop = (
                 sym.join(labels.withColumnRenamed("node", "__d"), "__d")
                 .groupBy(F.col("__s").alias("node"))
-                .agg(F.min("comp").alias("__nc"))
+                .agg(
+                    F.min("comp").alias("comp"),
+                    F.min(F.when(F.col("__s") == F.col("__d"), F.col("comp"))).alias("__old"),
+                )
+                .localCheckpoint(eager=False)
             )
-            # carry the round's OLD label through the update so the
-            # convergence count reads the checkpointed rows directly
-            # (r12: the previous shape re-joined `jumped` against
-            # `labels` every round just to compare — one extra shuffle
-            # join per round)
-            upd = labels.join(nbr_min, "node", "left").select(
-                "node",
-                F.col("comp").alias("__old"),
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("__nc"), F.col("comp"))
-                ).alias("comp"),
-            )
+            # labels only fall and a jump cannot undo a change, so a
+            # propagation that changes nothing is the fixed point: return
+            # it before paying for the jump join
+            if prop.where(F.col("comp") != F.col("__old")).count() == 0:
+                return prop.select("node", "comp")
         # pointer jumping: comp <- comp(comp). Labels are always node
-        # ids present in `upd` (init comp=node; mins propagate existing
+        # ids present in `prop` (init comp=node; mins propagate existing
         # ids), so the join always matches; coalesce guards anyway.
-        ptr = upd.select(F.col("node").alias("comp"), F.col("comp").alias("__pc"))
-        jumped = (
-            upd.join(ptr, "comp", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("__pc"), F.col("comp")).alias("comp"),
-                (F.coalesce(F.col("__pc"), F.col("comp")) != F.col("__old")).alias(
-                    "__chg"
-                ),
-            )
-            # lazy (r13): the round's convergence count (or, for round
-            # 1, round 2's count) materializes the RDD; every later
-            # consumer reads the persisted blocks as before
-            .localCheckpoint(eager=False)
+        ptr = prop.select(F.col("node").alias("comp"), F.col("comp").alias("__pc"))
+        labels = (
+            prop.join(ptr, "comp", "left")
+            .select("node", F.coalesce(F.col("__pc"), F.col("comp")).alias("comp"))
         )
-        labels = jumped.select("node", "comp")
-        # Round 1's convergence count is provably redundant (r13):
-        # any edge (a, b), a != b, gives its larger endpoint a comp
-        # < itself, so changed >= 1 whenever sym is non-empty — and
-        # when sym IS empty every round is an empty-frame no-op, so
-        # deferring the first count to round 2 costs nothing there
-        # either. One scheduler round-trip saved per CC build.
-        if it == 0:
-            continue
-        changed = jumped.where(F.col("__chg")).count()  # cached scan, no join
-        if changed == 0:
-            return labels
     raise ConvergenceError(f"connected_components did not converge in {max_iter} rounds")
 
 
@@ -199,8 +162,10 @@ def pagerank(
     e = (
         e.join(out_w, "__s")
         .select("__s", "__d", "__w", "__ow")
-        # lazy: the nodes count below materializes e and nodes in ONE
-        # job instead of two eager checkpoint jobs + the count
+        # lazy, but under AQE still not free: building it runs the
+        # shuffle stages below it as jobs (4 for the transition graph
+        # at sf0.001, scripts/probe_build.py); the nodes count then
+        # reads the persisted blocks
         .localCheckpoint(eager=False)
     )
     nodes = (

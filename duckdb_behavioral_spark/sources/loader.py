@@ -22,6 +22,17 @@ timestamp encodings across rounds, and user parquet can carry either:
 Every declared query loads through here, so operators can assume plain
 TimestampType downstream; operators additionally accept NTZ input
 defensively via ``event_time()`` (functions/timeutil.py).
+
+The schema is read from ONE parquet footer on the driver and handed to
+``spark.read.schema(...)``: ``spark.read.parquet`` alone infers it with
+a Spark job (``parquet at ...``), which every declared query would
+otherwise run while its DataFrame is built. The footer is the file
+Spark's own inference reads (a ``_common_metadata`` or ``_metadata``
+summary if present, else the first data file by path), converted by
+Spark's ``ParquetFileFormat.readSchemaFromFooter`` under the session's
+SQL conf, so the Spark row-metadata key, ``nanosAsLong`` and NTZ
+inference give the same schema. Missing paths, partitioned directories
+and directories without a data file keep Spark's inference.
 """
 
 from __future__ import annotations
@@ -71,9 +82,49 @@ def normalize_timestamps(df: DataFrame, nanos_cols: list[str] = ()) -> DataFrame
 _FANOUT_TABLES = {"documents"}
 
 
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's parquet inference would give ``path``, read
+    from one footer without a Spark job; None when inference must
+    decide (see the module docstring)."""
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    if state.conf().isParquetSchemaMergingEnabled():
+        return None  # inference reads every footer
+    conf = state.newHadoopConf()
+    Path = jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return None  # Spark raises its own path-not-found error
+    status = fs.getFileStatus(root)
+    if status.isDirectory():
+        # summaries first, then the first visible entry by name
+        # (globStatus sorts; "[!_.]*" skips the hidden files Spark skips)
+        globs = (fs.globStatus(Path(root, g))
+                 for g in ("_common_metadata", "_metadata", "[!_.]*"))
+        found = next((g for g in globs if g), None)
+        if found is None or found[0].isDirectory():
+            return None  # no data file, or partition discovery adds columns
+        status = found[0]
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        status.getPath(),
+        jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            conf, status,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        ),
+    )
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        footer, pq.ParquetToSparkSchemaConverter(state.conf())
+    )
+    return T._parse_datatype_json_string(schema.json())
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     _ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    schema = _footer_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    df = reader.parquet(path)
     if name in _FANOUT_TABLES:
         target = spark.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < max(2, target // 2):

@@ -36,3 +36,26 @@ def events(spark, sf_dir):
     from duckdb_behavioral_spark.sources import load_events
 
     return load_events(spark, sf_dir)
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), n)``: the Spark jobs ``fn`` ran,
+    counted through its own status-tracker job group."""
+    import itertools
+
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    calls = itertools.count()
+
+    def run(fn):
+        group = f"count_jobs-{next(calls)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        bus.waitUntilEmpty()  # job-end events reach the tracker through the bus
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -1,5 +1,7 @@
 """connected_components: the operator behind near-dup clustering."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,6 +64,63 @@ def test_star_converges_round_one(spark):
 def test_convergence_cap_raises(spark):
     with pytest.raises(ConvergenceError):
         connected_components(_edges(spark, [(i, i + 1) for i in range(40)]), max_iter=1)
+
+
+def _random_edges(seed):
+    """Several components (chains, stars, random trees with extra
+    edges) over shuffled ids, one long chain whose minimum sits at its
+    far end, duplicate and reversed edges, and explicit self-loops
+    (one of them an isolated node)."""
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(1, 100_000), 400))
+    edges = []
+    for _ in range(rng.randint(2, 6)):
+        nodes = [next(ids) for _ in range(rng.randint(2, 40))]
+        shape = rng.choice(("chain", "star", "tree"))
+        if shape == "chain":
+            edges += zip(nodes, nodes[1:])
+        elif shape == "star":
+            edges += [(nodes[0], n) for n in nodes[1:]]
+        else:
+            edges += [(n, nodes[rng.randrange(i)]) for i, n in enumerate(nodes) if i]
+            edges += [tuple(rng.sample(nodes, 2)) for _ in range(len(nodes) // 4)]
+    chain = sorted((next(ids) for _ in range(rng.randint(12, 40))), reverse=True)
+    edges += zip(chain, chain[1:])
+    edges += rng.sample(edges, 5) + [(d, s) for s, d in rng.sample(edges, 5)]
+    nodes = sorted({n for e in edges for n in e})
+    edges += [(n, n) for n in rng.sample(nodes, 3)] + [(next(ids),) * 2]
+    rng.shuffle(edges)
+    return edges
+
+
+def _union_find(edges):
+    """node -> min id of its component, in pure Python."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for s, d in edges:
+        a, b = find(s), find(d)
+        parent[max(a, b)] = min(a, b)
+    return {n: find(n) for n in parent}
+
+
+@pytest.mark.parametrize("seed", range(20))
+def test_matches_union_find_on_random_graphs(spark, seed):
+    edges = _random_edges(seed)
+    assert _comp_map(connected_components(_edges(spark, edges))) == _union_find(edges)
+
+
+def test_random_graphs_need_three_rounds(spark):
+    # the generator's long chain (12+ nodes, minimum at the far end)
+    # takes more than two rounds, so the comparison covers round >= 3
+    with pytest.raises(ConvergenceError):
+        connected_components(_edges(spark, _random_edges(0)), max_iter=2)
 
 
 def test_dedup_clusters_transitive_chain(spark):

@@ -83,3 +83,58 @@ def test_operators_accept_raw_ntz_frames(spark, tmp_path):
                         ["event_type = 'view'", "event_type = 'click'"],
                         ["user_id"])
     assert f.first()["step"] == 2
+
+
+def _assert_footer_schema(spark, count_jobs, sf_dir, name):
+    """``load_table`` takes its schema from one footer, with no Spark
+    job, and it equals the one Spark's own inference gives."""
+    from duckdb_behavioral_spark.sources.loader import _NANOS_TS_COLS
+
+    schema, jobs = count_jobs(lambda: load_table(spark, sf_dir, name).schema)
+    assert jobs == 0, f"{name}: load_table ran {jobs} Spark job(s)"
+    inferred = normalize_timestamps(
+        spark.read.parquet(f"{sf_dir}/{name}.parquet"), _NANOS_TS_COLS.get(name, [])
+    ).schema
+    assert schema == inferred, name
+
+
+def test_load_table_schema_matches_inference_on_testdata(spark, count_jobs, sf_dir):
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(sf_dir) if f.endswith(".parquet"))
+    assert "events" in names and "documents" in names
+    for name in names:
+        _assert_footer_schema(spark, count_jobs, sf_dir, name)
+
+
+def test_load_table_schema_of_spark_written_directory(spark, count_jobs, tmp_path):
+    # three part files plus _SUCCESS and hidden .crc files, with the
+    # Spark row-metadata key in every footer
+    (spark.range(30)
+     .selectExpr("id", "CAST(id AS DECIMAL(12, 2)) AS amount", "CAST(id AS INT) AS small",
+                 "array(id, id + 1) AS arr", "map('k', id) AS m",
+                 "named_struct('a', id, 'b', CAST(id AS STRING)) AS st",
+                 "timestamp_micros(id) AS ts", "CAST(timestamp_micros(id) AS TIMESTAMP_NTZ) AS ntz")
+     .repartition(3)
+     .write.parquet(str(tmp_path / "parts.parquet")))
+    assert len([f for f in os.listdir(tmp_path / "parts.parquet") if f.startswith("part-")]) == 3
+    _assert_footer_schema(spark, count_jobs, str(tmp_path), "parts")
+
+
+def test_load_table_schema_of_ntz_and_nanos_files(spark, count_jobs, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    us = [1_700_000_000_000_000, 1_700_000_001_000_000]
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64()),
+                             "ts": pa.array(us, pa.timestamp("us"))}),
+                   str(tmp_path / "ntz.parquet"))
+    # TIMESTAMP(NANOS): the loader's events table reads it as long nanos
+    pq.write_table(pa.table({"event_id": pa.array([1, 2], pa.int64()),
+                             "ts": pa.array([u * 1000 + 789 for u in us], pa.timestamp("ns"))}),
+                   str(tmp_path / "events.parquet"), version="2.6")
+    _assert_footer_schema(spark, count_jobs, str(tmp_path), "ntz")
+    _assert_footer_schema(spark, count_jobs, str(tmp_path), "events")
+    assert isinstance(load_table(spark, str(tmp_path), "events").schema["ts"].dataType,
+                      T.TimestampType)
+    vals = [r[0] for r in load_table(spark, str(tmp_path), "events")
+            .select(F.unix_micros("ts")).orderBy(F.col("ts")).collect()]
+    assert vals == us
