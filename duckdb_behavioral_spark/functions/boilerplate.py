@@ -77,17 +77,8 @@ def boilerplate_passages(
 ) -> DataFrame:
     """(rank, fp, n_docs, n_occ, doc_share_permille, sample) — the
     TOP_N most cross-document-shared word-8-gram passages."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the gram transform (r13): see dedup._shingle_sets —
-    # single-split scans otherwise pin the 8-gram+md5 work to one task
     grams = (
-        spread(
-            docs.where(F.col(text).isNotNull()).select(
-                F.col(id_col), F.col(text)
-            ),
-            id_col,
-        )
+        docs.where(F.col(text).isNotNull())
         .select(
             F.col(id_col).alias("doc_id"),
             tokens(F.lower(F.col(text))).alias("__toks"),

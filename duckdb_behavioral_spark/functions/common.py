@@ -164,23 +164,3 @@ def sql_shingles3(toks_expr: str) -> str:
         f"i -> array_to_string({toks_expr}[i:i+2], ' '))) "
         f"ELSE CAST([] AS VARCHAR[]) END"
     )
-
-
-# --- plan helpers ---------------------------------------------------------
-
-def spread(df, key: str):
-    """Repartition ``df`` by ``key`` ONLY when the scan produced fewer
-    splits than the cluster has cores.
-
-    Heavy per-row map work (gram explodes, shingle hashing) inherits
-    the scan's parallelism; a small parquet file arrives as ONE split
-    (row groups are the split unit), so a single core would do the
-    whole corpus's interpreted-HOF work. At real scale the scan has
-    thousands of splits and this is a no-op — the check costs one
-    physical-plan conversion, not a job.
-    """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target, F.col(key))
-    return df

@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.functions.common import (
     shingles3,
-    spread,
     sql_shingles3,
     sql_tokens,
     sql_word_grams,
@@ -177,9 +176,7 @@ def repetition_stats(
     # the same fix that cut dedup_passage 26.5s -> 2s in round 4).
     # Both arrays are tagged, concatenated, and exploded once — one
     # (doc, tag, gram) shuffle with map-side combine serves both
-    # signals. spread() unpins the gram build from a single-split
-    # local scan (no-op on a real multi-split scan).
-    df = spread(df, id_col)
+    # signals.
     base = df.select(
         F.col(id_col),
         F.length(F.trim(F.col(text))).cast("long").alias("n_chars"),

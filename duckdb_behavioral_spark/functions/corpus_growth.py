@@ -53,14 +53,8 @@ def vocab_growth(
         F.max(id_col).alias("__hi"),
         F.count(F.lit(1)).alias("__n"),
     )
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the tokenize (r13): see dedup._shingle_sets — the
-    # per-doc tokenize+explode otherwise runs at the scan's
-    # single-split parallelism on small inputs (no-op at scale)
     first = (
-        spread(base.select(F.col(id_col), F.col(text)), id_col)
-        .select(
+        base.select(
             F.col(id_col), tokens(F.lower(F.col(text))).alias("__toks")
         )
         .select(F.col(id_col), F.explode("__toks").alias("term"))

@@ -137,20 +137,9 @@ def _shingle_sets(df: DataFrame) -> DataFrame:
     deliberate barrier: the set feeds both legs of the candidate join
     and Catalyst would otherwise inline-recompute the interpreted HOF
     pipeline once per leg.
-
-    ``spread`` runs BEFORE the shingle transform (r13): projections
-    stay below a trailing repartition, so the old shape did the whole
-    corpus's tokenize->shingle->md5 work at the SCAN's parallelism —
-    one task for a single-split parquet file (the common.spread
-    rationale). Spreading first puts the heavy map work on every core;
-    at real scale the scan has thousands of splits and spread is a
-    no-op, leaving the plan unchanged.
     """
-    from duckdb_behavioral_spark.functions.common import spread
-
     return (
-        spread(df.select("doc_id", F.col("text")), "doc_id")
-        .select("doc_id", tokens(F.col("text")).alias("__toks"))
+        df.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .select(
             "doc_id",
             F.array_distinct(
@@ -243,14 +232,8 @@ def hashed_shingle_stream(df: DataFrame) -> DataFrame:
     over the exploded rows (vs NUM_HASHES interpreted HOF passes per
     document), and partial aggregation shrinks the shuffle to
     NUM_HASHES longs per doc."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the transform (r13): see _shingle_sets — the
-    # md5-per-shingle map work otherwise runs at the scan's
-    # single-split parallelism on small inputs (no-op at scale)
     return (
-        spread(df.select("doc_id", F.col("text")), "doc_id")
-        .select("doc_id", tokens(F.col("text")).alias("__toks"))
+        df.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .where(F.size(F.col("__toks")) >= 3)
         .select(
             "doc_id",
@@ -593,22 +576,13 @@ FROM documents dd LEFT JOIN comp c USING (doc_id)
 # ---------------------------------------------------------------------------
 
 def simhash32(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """32-bit SimHash of token hashes (term frequency weighted).
-
-    Token hashes are materialized behind a repartition barrier so the
-    32 per-bit sign-sums fold over an attribute reference instead of
-    re-deriving the token-hash array 32 times.
-    """
-
-    from duckdb_behavioral_spark.functions.common import spread
-
+    """32-bit SimHash of token hashes (term frequency weighted)."""
     # Exploded form (same pattern as minhash_signatures): one row per
     # token hash, 32 codegen'd bit-sign sums as grouped aggregates with
     # map-side partials — replaces 32 interpreted HOF folds per doc.
     # explode_outer keeps zero-token docs (simhash 0, as the oracle's
     # empty-list fold produces); their NULL row contributes sign 0.
-    # spread BEFORE the transform (r13): see _shingle_sets.
-    base = spread(df.select(F.col(id_col), F.col(text)), id_col).select(
+    base = df.select(
         F.col(id_col),
         F.explode_outer(F.transform(tokens(F.col(text)), md5_hash48)).alias("h"),
     )

@@ -69,14 +69,8 @@ _CAP_K = TRUTH_DF_CAP.bit_length() - 1
 def shingle_df_profile(docs: DataFrame) -> DataFrame:
     """(k, n_shingles, lo_df, hi_df, postings, postings_share_permille,
     truth_band) — power-of-2 shingle-df histogram."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the shingle transform (r13): see
-    # dedup._shingle_sets — single-split scans otherwise pin the
-    # md5-per-shingle work to one task (no-op at scale)
     dfed = (
-        spread(docs.select("doc_id", "text"), "doc_id")
-        .select(tokens(F.col("text")).alias("__toks"))
+        docs.select(tokens(F.col("text")).alias("__toks"))
         .select(
             F.explode(
                 F.array_distinct(

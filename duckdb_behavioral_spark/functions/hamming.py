@@ -65,12 +65,7 @@ def simhash64(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Data
     refs — interpreted HOF evaluation does not CSE, and a per-half md5
     in the lambda measured ~2x the signature stage). ``explode_outer``
     keeps zero-token docs (simhash 0)."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the transform (r13): see dedup._shingle_sets — the
-    # md5-per-token map work otherwise runs at the scan's single-split
-    # parallelism on small inputs (no-op at scale)
-    base = spread(df.select(F.col(id_col), F.col(text)), id_col).select(
+    base = df.select(
         F.col(id_col),
         F.explode_outer(
             F.transform(

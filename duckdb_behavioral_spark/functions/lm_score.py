@@ -29,7 +29,7 @@ corpus), so there is no smoothing branch to diverge on.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.functions.common import (
@@ -46,13 +46,9 @@ TAIL_K = 25
 def lm_likelihood_tails(
     docs: DataFrame, text: str = "text", id_col: str = "doc_id", k: int = TAIL_K
 ) -> DataFrame:
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the tokenize (r13): see dedup._shingle_sets
-    toked = spread(
-        docs.where(F.col(text).isNotNull()).select(F.col(id_col), F.col(text)),
-        id_col,
-    ).select(F.col(id_col), tokens(F.lower(F.col(text))).alias("__toks"))
+    toked = docs.where(F.col(text).isNotNull()).select(
+        F.col(id_col), tokens(F.lower(F.col(text))).alias("__toks")
+    )
     # Checkpoint barrier (the dedup.py banded-sigs pattern): ``pairs``
     # feeds BOTH the LM aggregate and the probe side of the join, and
     # ``scored`` below feeds two ranked-topk tails — without barriers

@@ -40,13 +40,7 @@ TOPK = 50
 def bigram_lm(docs: DataFrame, text: str = "text", k: int = TOPK) -> DataFrame:
     """(rank, w1, w2, n, n_w1, p_permille): top-``k`` corpus bigrams by
     count with truncated-permille conditional probability."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the tokenize (r13): see dedup._shingle_sets. Keyed
-    # on the text itself — the only column this operator requires.
-    toked = spread(docs.select(F.col(text)), text).select(
-        tokens(F.lower(F.col(text))).alias("__toks")
-    )
+    toked = docs.select(tokens(F.lower(F.col(text))).alias("__toks"))
     # bigrams as (w1, w2) structs straight off the token array (r13):
     # no concat_ws + split_part round trip per gram — see
     # lm_score.lm_likelihood_tails

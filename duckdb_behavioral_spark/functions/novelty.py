@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 from duckdb_behavioral_spark.functions.common import (
     md5_hash48,
     shingles3,
-    spread,
     sql_md5_hash48,
     sql_shingles3,
     sql_tokens,
@@ -47,8 +46,7 @@ def ngram_novelty(docs: DataFrame) -> DataFrame:
     with >= 3 tokens; docs shorter than one shingle are excluded
     (novelty undefined on an empty shingle set)."""
     sh = (
-        spread(docs, "doc_id")
-        .select("doc_id", tokens(F.col("text")).alias("__toks"))
+        docs.select("doc_id", tokens(F.col("text")).alias("__toks"))
         .where(F.size(F.col("__toks")) >= 3)
         .select(
             "doc_id",

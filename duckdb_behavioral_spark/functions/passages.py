@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_behavioral_spark.functions.common import spread, word_grams_indexed
+from duckdb_behavioral_spark.functions.common import word_grams_indexed
 
 __all__ = ["passage_dup_stats"]
 
@@ -57,8 +57,7 @@ def passage_dup_stats(
         F.substring(F.md5(F.concat(F.lit("psg:"), F.col("sh"))), 1, 12), 16, 10
     ).cast("long")
     base = (
-        spread(docs, id_col)
-        .where(F.size(toks) >= SHINGLE_W)
+        docs.where(F.size(toks) >= SHINGLE_W)
         .select(F.col(id_col).alias("doc_id"), toks.alias("__toks"))
     )
     pairs = (

@@ -44,13 +44,9 @@ def _doc_bigrams(docs: DataFrame, id_col: str, text: str) -> DataFrame:
     # string mapping is a bijection and grouping by the pair is
     # exactly grouping by the string. The string is reconstructed
     # only for the tie-break sort and the single winning phrase.
-    from duckdb_behavioral_spark.functions.common import spread
-
-    # spread BEFORE the tokenize (r13): see dedup._shingle_sets
-    toked = spread(
-        docs.where(F.col(text).isNotNull()).select(F.col(id_col), F.col(text)),
-        id_col,
-    ).select(F.col(id_col), tokens(F.lower(F.col(text))).alias("__toks"))
+    toked = docs.where(F.col(text).isNotNull()).select(
+        F.col(id_col), tokens(F.lower(F.col(text))).alias("__toks")
+    )
     sz = F.size(F.col("__toks"))
     bigrams = F.when(
         sz >= 2,

@@ -39,8 +39,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from duckdb_behavioral_spark.functions.common import spread
-
 __all__ = ["term_stats", "bm25_topk"]
 
 K1 = "1.2"
@@ -69,7 +67,7 @@ def term_stats(docs: DataFrame, text: str = "text", id_col: str = "doc_id"):
     Without the barrier each consumer re-runs the explode+agg subtree
     and AQE serializes ~12 mini-stages (measured 12.3s -> 3.2s on the
     sf0.1 bench)."""
-    toks = spread(docs, id_col).select(
+    toks = docs.select(
         F.col(id_col).alias("doc_id"),
         F.explode(_tokens(F.col(text))).alias("term"),
     )
@@ -113,7 +111,7 @@ def bm25_topk(
     # 100 TB you never build (doc, term) for every term to answer a
     # fixed small query set; term_stats() remains the library op for
     # when the whole index IS the product.
-    per_doc = spread(docs, id_col).select(
+    per_doc = docs.select(
         F.col(id_col).alias("doc_id"),
         # long, matching the oracle's BIGINT len(string_split(...))
         F.size(toks).cast("long").alias("dl"),

@@ -47,20 +47,9 @@ def _vec_base(
 ) -> DataFrame:
     """The shared (cid, v, nrm) corpus projection: cast to double[],
     left-fold norm, zero-norm vectors dropped (undefined cosine —
-    ANSI div-by-zero).
-
-    ``spread`` first (r13): the interpreted norm fold — and every
-    downstream Arrow kernel fed by this projection — otherwise runs at
-    the scan's single-split parallelism on small inputs (common.spread;
-    a no-op at real scale). Per-row results are partition-independent,
-    and every downstream reduction is either a Spark aggregate or a
-    sort-anchored selection, so the partitioning change cannot move
-    any output (oracle-checked across the family)."""
-    from duckdb_behavioral_spark.functions.common import spread
-
+    ANSI div-by-zero)."""
     return (
-        spread(df.select(F.col(id_col), F.col(vec_col)), id_col)
-        .select(
+        df.select(
             F.col(id_col).alias("cid"), F.col(vec_col).cast("array<double>").alias("v")
         )
         .withColumn("nrm", _norm(F.col("v")))

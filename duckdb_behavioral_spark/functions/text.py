@@ -78,14 +78,7 @@ def fingerprint(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Da
 
 def quality_score(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Integer quality heuristics: length band, stopword permille,
-    uniqueness permille (vocabulary richness).
-
-    ``spread`` first (r13): the per-doc tokenize/distinct otherwise
-    runs at the scan's single-split parallelism on small inputs
-    (no-op at scale — see common.spread)."""
-    from duckdb_behavioral_spark.functions.common import spread
-
-    df = spread(df.select(F.col(id_col), F.col(text)), id_col)
+    uniqueness permille (vocabulary richness)."""
     toks = tokens(F.col(text))
     n = F.size(toks).cast("long")
     stop = F.size(F.filter(toks, lambda t: t.isin("the", "a"))).cast("long")

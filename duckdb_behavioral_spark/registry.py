@@ -66,7 +66,7 @@ DRIVER_PRIORITY = [
     "sketch_quantile_sample",
     # --- r13 batch 2: truth-domain prune + SHJ verify joins, bigram
     # structs, novelty aggregate-only counts, OLS long products,
-    # spread()-ed builders (quality_score feeds the last two)
+    # tokenize builders (quality_score feeds the last two)
     "dedup_minhash_sigs",
     "corpus_ngram_novelty",
     "text_lm_likelihood",

@@ -69,16 +69,25 @@ def normalize_timestamps(df: DataFrame, nanos_cols: list[str] = ()) -> DataFrame
     return df.withColumns(repl) if repl else df
 
 
-# Tables whose per-row map work is CPU-heavy (text shingling/token
-# pipelines). A single-file single-row-group input plans as ONE scan
-# task, serializing that work no matter how many cores the session has
-# — fan these out to the session parallelism when the scan is
-# under-split. At production scale a corpus scan carries thousands of
-# splits, so the branch never fires and no shuffle is added; filter
-# pushdown and column pruning pass through Repartition unchanged.
-# (embeddings deliberately NOT here: its queries run several small
-# control-plane jobs per query, and a repartition per job re-execution
-# costs more than the serial vector math it parallelizes.)
+# The spread policy, and the only place the package spreads a scan: a
+# table named here is repartitioned to the session parallelism when its
+# scan has fewer than half that many splits. A single-file,
+# single-row-group parquet input is ONE split; at production scale a
+# scan has thousands, the branch never fires and no shuffle is added.
+# Filter pushdown and column pruning pass through the Repartition.
+# Operators downstream never repartition for parallelism again.
+# - documents: its queries do CPU-heavy per-row text work (tokenize,
+#   shingle, md5) that one scan task would otherwise do alone. Without
+#   the fan-out, corpus_ngram_novelty took a median 2.60 s instead of
+#   2.24 s (sf0.1, local[4], 4 runs each).
+# - embeddings: not spread. Its queries run several small jobs each,
+#   and the extra partitions and Python workers cost more than the
+#   vector math they split: spread, ann_ivfpq_topk took a median 9.2 s
+#   instead of 3.0 s at local[32] and 4.3 s instead of 3.2 s at
+#   local[4] (sf0.1).
+# A library caller that hands an operator its own single-split
+# DataFrame gets no fan-out; repartition it first if its per-row work
+# is heavy.
 _FANOUT_TABLES = {"documents"}
 
 

@@ -284,25 +284,6 @@ def _scope_keyword(sql: str, start: int, d0: int, kw: str):
     return None
 
 
-def _scope_end(sql: str, start: int, d0: int) -> int:
-    """Position where the SELECT scope opened at depth ``d0`` closes:
-    the ')' dropping below d0, or end of string."""
-    i = start
-    while i < len(sql):
-        c = sql[i]
-        if c == "'":
-            i = _skip_string(sql, i)
-            continue
-        if c == "(":
-            # skip the whole nested unit
-            i = _match_paren(sql, i) + 1
-            continue
-        if c == ")":
-            return i
-        i += 1
-    return len(sql)
-
-
 # --- lexical helpers -------------------------------------------------------
 
 

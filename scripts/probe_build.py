@@ -3,10 +3,13 @@ CONSTRUCTION (py4j column building plus the Spark jobs that barriers
 run while the DataFrame is built) and EXECUTION (noop sink), and list
 every construction-time ``localCheckpoint``, ``count`` and parquet read
 with the Spark jobs it ran and its wall time. Each query runs twice:
-cold, then warm.
+cold, then warm. ``--all`` instead builds every declared query once,
+without executing it, and prints one line of construction jobs per
+query plus their total.
 
     python scripts/probe_build.py --seed 7 dedup_clusters
     python scripts/probe_build.py --sf <sf_dir> <query> [<query>...] [--profile]
+    python scripts/probe_build.py --sf <sf_dir> --all
 
 The session has the benchmark's settings (perfbench/run.py:
 ``local[3]``, 6 shuffle partitions, 2 GB heap, C1-only JIT). With
@@ -117,14 +120,37 @@ def probe(spark, steps, fn, sf_dir, tag, profile):
         print(out.getvalue())
 
 
+def job_table(spark, steps, queries, sf_dir) -> None:
+    """Build each query once (no execution) and print its construction
+    jobs, then the total."""
+    import run
+
+    total = 0
+    for name, fn in queries.items():
+        run.between_queries(spark)
+        steps.phase(f"{name}:build")
+        fn(spark, sf_dir)
+        steps.group = None
+        jobs = steps.jobs(f"{name}:build") + sum(steps.jobs(g) for _, g, _ in steps.steps)
+        total += jobs
+        print(f"{jobs:>4}  {name}", flush=True)
+    print(f"{total:>4}  total over {len(queries)} queries")
+
+
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument("--seed", type=int, help="generate the benchmark input from this seed")
     src.add_argument("--sf", help="an existing testdata directory")
-    p.add_argument("queries", nargs="+")
+    p.add_argument("queries", nargs="*")
+    p.add_argument("--all", action="store_true",
+                   help="construction jobs of every declared query (needs --sf)")
     p.add_argument("--profile", action="store_true")
     args = p.parse_args(argv)
+    if args.all == bool(args.queries):
+        p.error("give either query names or --all")
+    if args.all and args.sf is None:
+        p.error("--all needs --sf")
 
     import run
     import workloads
@@ -146,6 +172,8 @@ def main(argv=None) -> int:
                     w.generate(args.seed, "full", sf_dir, run.CORES)
         steps = Steps(spark)
         qs = E.queries()
+        if args.all:
+            job_table(spark, steps, qs, sf_dir)
         for name in args.queries:
             for rep in ("cold", "warm"):
                 run.between_queries(spark)

@@ -91,11 +91,16 @@ CONSTRUCTION_JOBS = [
     # signature checkpoint 1, candidate/verify/symmetrize checkpoint 6,
     # CC rounds 1-2 (converged) 5, convergence count 2; sf0.001's
     # documents file is ONE split, so the loader's fan-out repartition
-    # adds a stage job under the shingle-set checkpoint and
-    # common.spread's partition count runs it once more: 16 at any core
+    # adds a stage job under the shingle-set checkpoint: 15 at any core
     # count (14 on the benchmark's 3-split input at local[3])
-    ("dedup_clusters", 16),
+    ("dedup_clusters", 15),
     ("q1_sessionize", 0),
+    # no barrier: a job here is a partition count or a second spread
+    # policy downstream of the loader
+    ("text_quality", 0),
+    # the IVF centroid and PQ codebook collects; the projection's
+    # barrier sits on the plain embeddings scan and runs none
+    ("ann_ivfpq_topk", 2),
 ]
 
 
