@@ -138,41 +138,27 @@ def q_dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from duckdb_behavioral_spark.functions.dedup import clusters_for
 
     clusters = clusters_for(spark, sf_dir)
-    sizes = clusters.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("size")
+    sizes = clusters.groupBy("cluster_id").agg(F.expr("CAST(count(1) AS BIGINT) AS size"))
+    hist = sizes.groupBy(F.expr("size AS cluster_size")).agg(
+        F.expr("CAST(count(1) AS BIGINT) AS n_clusters")
     )
-    # Materialize the BOUNDED histogram (one row per distinct cluster
-    # size) once, then derive the doc total from it — otherwise the
-    # n_docs scalar branch re-runs the entire CC iteration a second
-    # time (sum over sizes == sum(size * n_clusters) over the
-    # histogram, exactly). eager=False keeps THIS barrier out of
-    # DataFrame construction.
-    hist = (
-        sizes.groupBy(F.col("size").alias("cluster_size"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_clusters"))
-        .localCheckpoint(eager=False)
-    )
-    n_docs = hist.agg(
-        F.sum(F.col("cluster_size") * F.col("n_clusters")).alias("__nd")
-    )
-    return (
-        hist
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "cluster_size",
-            "n_clusters",
-            (F.col("cluster_size") * F.col("n_clusters"))
-            .cast("long")
-            .alias("n_docs"),
-            F.expr("div(cluster_size * n_clusters * 1000, __nd)")
-            .cast("long")
-            .alias("doc_share_permille"),
-            ((F.col("cluster_size") - 1) * F.col("n_clusters"))
-            .cast("long")
-            .alias("removed_by_dedup"),
-        )
-        .orderBy("cluster_size")
-    )
+    # The doc total is a 1-row aggregate of the BOUNDED histogram (one
+    # row per distinct cluster size; sum over sizes == sum(size *
+    # n_clusters) over the histogram, exactly), attached by a broadcast
+    # cross join. No barrier: the lineage below ``hist`` ends at
+    # connected_components' checkpoints, so the total re-derives the
+    # small histogram at execution instead of running a checkpoint's
+    # jobs at construction, and the query's construction jobs are
+    # exactly ``dedup_clusters``'. A ``sum(...) OVER ()`` window would
+    # be a raw single-partition exchange under plans.audit.
+    n_docs = hist.agg(F.expr("sum(cluster_size * n_clusters) AS __nd"))
+    return hist.crossJoin(F.broadcast(n_docs)).selectExpr(
+        "cluster_size",
+        "n_clusters",
+        "CAST(cluster_size * n_clusters AS BIGINT) AS n_docs",
+        "CAST(div(cluster_size * n_clusters * 1000, __nd) AS BIGINT) AS doc_share_permille",
+        "CAST((cluster_size - 1) * n_clusters AS BIGINT) AS removed_by_dedup",
+    ).orderBy("cluster_size")
 
 
 def _cluster_sizes_sql() -> str:

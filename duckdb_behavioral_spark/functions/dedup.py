@@ -19,6 +19,14 @@ Four families, each designed for the 100 TB posture:
 
 All hashing uses the shared cross-engine polynomial char hash so the
 DuckDB oracles reproduce results bit-for-bit.
+
+Expressions are built as SQL strings (``selectExpr``, ``F.expr``,
+``where("...")``), not as chains of Column nodes. These queries are
+construction-bound (``dedup_clusters`` spends ~95 % of its time
+building its DataFrame), and under PySpark 4 every Column node costs
+several py4j round trips (the active session, a conf value and the call
+site are fetched per node) where a SQL string costs one. The executed
+arithmetic is the same either way.
 """
 
 from __future__ import annotations
@@ -129,6 +137,22 @@ FROM documents GROUP BY md5(text)
 # n-gram Jaccard (MinHash-LSH candidates, exact verification)
 # ---------------------------------------------------------------------------
 
+# Spark SQL text of ``tokens(text)``, ``shingles3(__toks)`` and
+# ``md5_hash48(x)`` (functions/common.py), expression for expression,
+# so the shingle-set projection below is two SQL strings instead of
+# ~40 Column nodes, each of which costs several py4j round trips to
+# build. tests/test_dedup.py checks that both forms give the same
+# sets.
+_SQL_TOKENS = r"split(trim(text), '\\s+', -1)"
+_SQL_SHINGLES3 = (
+    "CASE WHEN size(__toks) >= 3 THEN array_distinct(slice(zip_with("
+    "zip_with(__toks, slice(__toks, 2, size(__toks)), (a, b) -> concat(a, ' ', b)),"
+    " slice(__toks, 3, size(__toks)), (ab, c) -> concat(ab, ' ', c)),"
+    " 1, size(__toks) - 2)) ELSE CAST(array() AS ARRAY<STRING>) END"
+)
+_SQL_MD5_HASH48 = "CAST(conv(substring(md5(CAST(x AS BINARY)), 1, 12), 16, 10) AS BIGINT)"
+
+
 def _shingle_sets(df: DataFrame) -> DataFrame:
     """(doc_id, sh) with sh = distinct hashed 3-gram shingles.
 
@@ -139,12 +163,10 @@ def _shingle_sets(df: DataFrame) -> DataFrame:
     pipeline once per leg.
     """
     return (
-        df.select("doc_id", tokens(F.col("text")).alias("__toks"))
-        .select(
+        df.selectExpr("doc_id", f"{_SQL_TOKENS} AS __toks")
+        .selectExpr(
             "doc_id",
-            F.array_distinct(
-                F.transform(shingles3(F.col("__toks")), md5_hash48)
-            ).alias("sh"),
+            f"array_distinct(transform({_SQL_SHINGLES3}, x -> {_SQL_MD5_HASH48})) AS sh",
         )
         .localCheckpoint(eager=False)
     )
@@ -176,8 +198,8 @@ def dedup_ngram_jaccard(df: DataFrame) -> DataFrame:
     # ``dedup_eval.lsh_recall_eval``.
     sh = _shingle_sets(df)
     cand = minhash_candidate_pairs(
-        df, sig=banded_from_hashes(sh.select("doc_id", F.explode("sh").alias("h")))
-    ).select("doc_a", "doc_b")
+        df, sig=banded_from_hashes(sh.selectExpr("doc_id", "explode(sh) AS h"))
+    ).selectExpr("doc_a", "doc_b")
     # SHUFFLE_HASH with the PAIR side as build (r13): the shingle legs'
     # origin stats are the documents parquet (small, compressed text),
     # but the materialized arrays are ~20-50x that — the static planner
@@ -188,22 +210,17 @@ def dedup_ngram_jaccard(df: DataFrame) -> DataFrame:
     # driver collect at any scale (guide §3.1).
     pairs = (
         cand.hint("shuffle_hash")
-        .join(sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sha")), "doc_a")
+        .join(sh.selectExpr("doc_id AS doc_a", "sh AS sha"), "doc_a")
         .hint("shuffle_hash")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("shb")), "doc_b")
+        .join(sh.selectExpr("doc_id AS doc_b", "sh AS shb"), "doc_b")
     )
-    inter = F.size(F.array_intersect(F.col("sha"), F.col("shb")))
-    uni = F.size(F.col("sha")) + F.size(F.col("shb")) - inter
-    return (
-        pairs.select(
-            "doc_a",
-            "doc_b",
-            inter.cast("long").alias("n_inter"),
-            uni.cast("long").alias("n_union"),
-        )
-        .where((F.col("n_union") > 0)
-               & (10 * F.col("n_inter") >= JACCARD_THRESHOLD_TENTHS * F.col("n_union")))
-    )
+    inter = "size(array_intersect(sha, shb))"
+    return pairs.selectExpr(
+        "doc_a",
+        "doc_b",
+        f"CAST({inter} AS BIGINT) AS n_inter",
+        f"CAST(size(sha) + size(shb) - {inter} AS BIGINT) AS n_union",
+    ).where(f"n_union > 0 AND 10 * n_inter >= {JACCARD_THRESHOLD_TENTHS} * n_union")
 
 
 # ---------------------------------------------------------------------------
@@ -250,9 +267,7 @@ def raw_sigs_from_hashes(base: DataFrame) -> DataFrame:
     Split out so the estimate-vs-exact calibration can compare
     component equality pair-wise (``minhash_calibration.py``)."""
 
-    # expr strings (r13, the banded_from_hashes lesson): one py4j call
-    # per component instead of a py4j round-trip per arithmetic node;
-    # executed arithmetic unchanged
+    # one SQL string per component (module docstring)
     return base.groupBy("doc_id").agg(
         *[
             F.expr(
@@ -273,11 +288,11 @@ def banded_from_hashes(base: DataFrame) -> DataFrame:
     yield identical signatures.
 
     Each band hash folds DIRECTLY over its LSH_ROWS min-aggregates
-    inside one grouped aggregate, with the whole expression built as
-    one ``F.expr`` string per band (r12): the previous
-    16-min-column + post-arithmetic staging cost ~3s of driver time
-    PER CONSUMER QUERY in py4j column construction and Catalyst
-    analysis — measured 10x cheaper fused, bit-identical output. The
+    inside one grouped aggregate, one ``F.expr`` string per band, and
+    the band explode is one ``inline`` string: a 16-min-column +
+    post-arithmetic staging cost ~3s of driver time PER CONSUMER QUERY
+    in py4j column construction and Catalyst analysis — measured 10x
+    cheaper fused, bit-identical output. The
     executed arithmetic is unchanged: ``min((a_j*h + b_j) % P)`` per
     component, then the ``(acc*MULT + s % BAND_MOD) % CHAR_HASH_MOD``
     left fold, exactly :func:`bands_from_sigs` over
@@ -293,21 +308,13 @@ def banded_from_hashes(base: DataFrame) -> DataFrame:
                 f"(({acc}) * {CHAR_HASH_MULT} + ({mn}) % {BAND_MOD})"
                 f" % {CHAR_HASH_MOD}"
             )
-        band_cols.append(F.expr(acc).alias(f"__bh{b}"))
-    agg = base.groupBy("doc_id").agg(*band_cols)
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.col(f"__bh{b}").alias("band_hash"),
-            )
-            for b in range(LSH_BANDS)
-        ]
+        band_cols.append(F.expr(f"{acc} AS __bh{b}"))
+    rows = ", ".join(
+        f"named_struct('band', CAST({b} AS INT), 'band_hash', __bh{b})"
+        for b in range(LSH_BANDS)
     )
-    return agg.select("doc_id", F.explode(arr).alias("bb")).select(
-        "doc_id",
-        F.col("bb.band").alias("band"),
-        F.col("bb.band_hash").alias("band_hash"),
+    return base.groupBy("doc_id").agg(*band_cols).selectExpr(
+        "doc_id", f"inline(array({rows}))"
     )
 
 
@@ -347,9 +354,9 @@ def capped_bands(sig: DataFrame) -> DataFrame:
     bucket ``collect_list``."""
     ok = (
         sig.groupBy("band", "band_hash")
-        .agg(F.count(F.lit(1)).alias("__bsz"))
-        .where(F.col("__bsz") <= MH_BAND_CAP)
-        .select("band", "band_hash")
+        .agg(F.expr("count(1) AS __bsz"))
+        .where(f"__bsz <= {MH_BAND_CAP}")
+        .selectExpr("band", "band_hash")
     )
     return sig.join(ok.hint("merge"), ["band", "band_hash"])
 
@@ -388,11 +395,11 @@ def bucket_pairs(capped: DataFrame, bucket_cols: "list[str]") -> DataFrame:
     allocation)."""
     return (
         capped.groupBy(*bucket_cols)
-        .agg(F.array_sort(F.collect_list("doc_id")).alias("__ds"))
-        .select(F.posexplode("__ds").alias("__i", "doc_a"), "__ds")
-        .select("doc_a", F.col("__i"), F.posexplode("__ds").alias("__j", "doc_b"))
-        .where(F.col("__j") > F.col("__i"))
-        .select("doc_a", "doc_b")
+        .agg(F.expr("array_sort(collect_list(doc_id)) AS __ds"))
+        .selectExpr("posexplode(__ds) AS (__i, doc_a)", "__ds")
+        .selectExpr("doc_a", "__i", "posexplode(__ds) AS (__j, doc_b)")
+        .where("__j > __i")
+        .selectExpr("doc_a", "doc_b")
     )
 
 
@@ -422,7 +429,7 @@ def minhash_candidate_pairs(
     return (
         bucket_pairs(capped_bands(sig), ["band", "band_hash"])
         .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("shared_bands"))
+        .agg(F.expr("count(1) AS shared_bands"))
     )
 
 
@@ -534,19 +541,24 @@ def dedup_clusters(df: DataFrame, edges: DataFrame | None = None) -> DataFrame:
 
     ``edges`` lets callers supply precomputed verified pairs
     (doc_a, doc_b) instead of rebuilding the MinHash/Jaccard stage.
+
+    The whole path is built from SQL strings (module docstring): ~390
+    py4j commands per warm build, where Column nodes took ~2,100. Its
+    construction jobs run under the lazy checkpoints (shingle sets,
+    banded signatures, symmetrized edges, each round's labels) and each
+    round's convergence count; a near-dup graph converges in round 2,
+    so it pays no pointer-jump join.
     """
     from duckdb_behavioral_spark.operators.graph import connected_components
 
     if edges is None:
-        edges = dedup_ngram_jaccard(df).select("doc_a", "doc_b")
+        edges = dedup_ngram_jaccard(df).selectExpr("doc_a", "doc_b")
     comp = connected_components(edges, src="doc_a", dst="doc_b").withColumnRenamed(
         "node", "doc_id"
     )
-    cluster = F.coalesce(F.col("comp"), F.col("doc_id"))
-    return df.select("doc_id").join(comp, "doc_id", "left").select(
-        "doc_id",
-        cluster.alias("cluster_id"),
-        (cluster == F.col("doc_id")).alias("is_canonical"),
+    cluster = "coalesce(comp, doc_id)"
+    return df.selectExpr("doc_id").join(comp, "doc_id", "left").selectExpr(
+        "doc_id", f"{cluster} AS cluster_id", f"{cluster} = doc_id AS is_canonical"
     )
 
 
@@ -586,12 +598,10 @@ def simhash32(df: DataFrame, text: str = "text", id_col: str = "doc_id") -> Data
         F.col(id_col),
         F.explode_outer(F.transform(tokens(F.col(text)), md5_hash48)).alias("h"),
     )
-    # the 32 sign-sums and the bit assembly are built as expr STRINGS
-    # (r13, the banded_from_hashes lesson): the per-Column py4j
-    # construction + Catalyst analysis of 32 nested when-trees cost
-    # ~0.5s of serial driver time per consumer query; the executed
-    # arithmetic is unchanged (NULL -> 0, bit set -> +1, else -1,
-    # then sum > 0 sets the bit)
+    # the 32 sign-sums and the bit assembly are SQL strings (module
+    # docstring): as 32 nested Column when-trees they cost ~0.5s of
+    # serial driver time per consumer query. NULL -> 0, bit set -> +1,
+    # else -1, then sum > 0 sets the bit
     sums = base.groupBy(id_col).agg(
         *[
             F.expr(

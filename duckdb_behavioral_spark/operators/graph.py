@@ -7,16 +7,32 @@ connected components with the component labeled by its minimum id.
 
 Scale design (100 TB posture):
 
-- **min-label propagation + pointer jumping.** Each round does
-  (1) ``label(x) <- min over neighbors' labels``, where every node is
-  its own neighbor through a self-loop — one shuffle join edge->label
-  plus a grouped min with map-side partials — then (2)
-  ``label(x) <- label(label(x))`` (pointer jumping), another equi-join.
-  Propagation alone needs O(component diameter) rounds; the jump
-  collapses chains so convergence is O(log d) — the same round-shape
-  as the published large-star/small-star alternation (Kiveris et al.,
-  "Connected Components in MapReduce and Beyond"), with edges held
-  constant instead of rewritten.
+- **min-label propagation + deferred pointer jumping.** Round 1 sets
+  ``label(x) <- min over neighbours' ids``, where every node is its own
+  neighbour through a self-loop: one grouped min with map-side
+  partials. Each later round propagates, ``label(x) <- min over
+  neighbours' labels`` (one shuffle join edge->label plus a grouped
+  min), and only if that changed some label, jumps:
+  ``label(x) <- label(label(x))``, another equi-join. Round 2 therefore
+  propagates straight from the round-1 labels, and a graph that has
+  converged after round 1 (near-dup graphs almost always have) pays
+  no jump join at all. Propagation alone needs O(component diameter)
+  rounds; the jump collapses chains — the round shape of the published
+  large-star/small-star alternation (Kiveris et al., "Connected
+  Components in MapReduce and Beyond"), with edges held constant
+  instead of rewritten. Deferring the first jump can add rounds on
+  long chains (0–2 on the random graphs of tests/test_graph.py).
+- **The fixed point is a propagation that changes nothing.** Labels
+  only fall and are always ids of the node's own component (round 1
+  takes neighbours' ids, propagation takes neighbours' labels, the jump
+  takes a label's label). If no label changes, every node's label is at
+  most each neighbour's, so labels are constant on a component; that
+  constant is an id of the component and at most every node's own id,
+  i.e. its minimum. The returned labels are exactly that propagation.
+- **Every projection and aggregate is one SQL string** (``selectExpr``,
+  ``F.expr``, ``where("...")``): a PySpark Column node costs several
+  py4j round trips to build, a SQL string one, and the rounds are built
+  on the driver between their construction jobs.
 - **Lineage is cut every round** (lazy ``localCheckpoint`` of the
   propagated labels, which the convergence count, the jump and the
   return all read; on a real cluster: ``checkpoint`` to the cluster
@@ -54,7 +70,8 @@ def connected_components(
 
     Nodes never mentioned in ``edges`` are absent (callers join them
     back as singletons — cheaper than unioning the full vertex set
-    through every iteration).
+    through every iteration). ``max_iter`` caps the propagation rounds,
+    round 1 included.
     """
     # ONE pass over the edge lineage: explode each edge into (s,d),
     # (d,s) and the self-loops (s,s), (d,d) instead of unioning copies
@@ -62,49 +79,36 @@ def connected_components(
     # Jaccard pipeline) edge subtree — a union evaluates the subtree
     # once per branch. The self-loops put every node's own label among
     # its neighbours' labels, so a round is one join and one grouped min.
-    s, d = F.col(src), F.col(dst)
+    loops = ", ".join(f"named_struct('__s', {a}, '__d', {b})"
+                      for a, b in ((src, dst), (dst, src), (src, src), (dst, dst)))
     sym = (
-        edges.select(
-            F.explode(
-                F.array(*[F.struct(a.alias("__s"), b.alias("__d"))
-                          for a, b in ((s, d), (d, s), (s, s), (d, d))])
-            ).alias("__e")
-        )
-        .select("__e.__s", "__e.__d")
+        edges.selectExpr(f"inline(array({loops}))")
         # lazy: the round-2 checkpoint materializes it, every later
         # round reads the persisted blocks
         .localCheckpoint(eager=False)
     )
     # round 1 fused: with init label = node, propagation is ONE grouped
-    # min over the edges (the self-loop supplies the node itself); it
-    # and its jump are materialized under round 2's checkpoint
-    prop = sym.groupBy(F.col("__s").alias("node")).agg(F.min("__d").alias("comp"))
-    for it in range(max_iter):
-        if it:
-            # round k >= 2: one join + one grouped min; the self-loop
-            # row carries the node's old label for the convergence count
-            prop = (
-                sym.join(labels.withColumnRenamed("node", "__d"), "__d")
-                .groupBy(F.col("__s").alias("node"))
-                .agg(
-                    F.min("comp").alias("comp"),
-                    F.min(F.when(F.col("__s") == F.col("__d"), F.col("comp"))).alias("__old"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            # labels only fall and a jump cannot undo a change, so a
-            # propagation that changes nothing is the fixed point: return
-            # it before paying for the jump join
-            if prop.where(F.col("comp") != F.col("__old")).count() == 0:
-                return prop.select("node", "comp")
-        # pointer jumping: comp <- comp(comp). Labels are always node
-        # ids present in `prop` (init comp=node; mins propagate existing
-        # ids), so the join always matches; coalesce guards anyway.
-        ptr = prop.select(F.col("node").alias("comp"), F.col("comp").alias("__pc"))
-        labels = (
-            prop.join(ptr, "comp", "left")
-            .select("node", F.coalesce(F.col("__pc"), F.col("comp")).alias("comp"))
+    # min over the edges (the self-loop supplies the node itself); it is
+    # materialized under round 2's checkpoint
+    labels = sym.groupBy(F.expr("__s AS node")).agg(F.expr("min(__d) AS comp"))
+    for _ in range(max_iter - 1):
+        # round k >= 2: one join + one grouped min; the self-loop row
+        # carries the node's old label for the convergence count
+        prop = (
+            sym.join(labels.withColumnRenamed("node", "__d"), "__d")
+            .groupBy(F.expr("__s AS node"))
+            .agg(F.expr("min(comp) AS comp"),
+                 F.expr("min(CASE WHEN __s = __d THEN comp END) AS __old"))
+            .localCheckpoint(eager=False)
         )
+        if prop.where("comp != __old").count() == 0:
+            return prop.selectExpr("node", "comp")
+        # pointer jumping, only after a round that changed a label:
+        # comp <- comp(comp). Labels are always node ids present in
+        # `prop`, so the join always matches; coalesce guards anyway.
+        ptr = prop.selectExpr("node AS comp", "comp AS __pc")
+        labels = prop.join(ptr, "comp", "left").selectExpr(
+            "node", "coalesce(__pc, comp) AS comp")
     raise ConvergenceError(f"connected_components did not converge in {max_iter} rounds")
 
 

@@ -6,7 +6,10 @@ base-condition event; forward returns the value of the event
 immediately *after* the last matched event, backward the value
 immediately *before* the earliest matched event. All events are kept —
 any event can be the returned node (src/sequence_next_node.rs:186-192).
-Rows with NULL timestamps are skipped (src/ffi/sequence_next_node.rs:132-135).
+Rows with NULL timestamps are skipped (src/ffi/sequence_next_node.rs:132-135):
+they are never a chain event or an adjacent candidate, but a group
+whose rows all have NULL timestamps still gets one row, with a NULL
+result, as in the SQL surface and the rest of the sequence family.
 
 Runs the exact kernel port (kernels/next_node.py) on the grouped
 mapInPandas engine; the value column rides along as the only string
@@ -17,6 +20,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -50,9 +54,14 @@ def sequence_next_node(
     ts_col = event_time(ts)
     value_col = F.expr(value) if isinstance(value, str) else value
     base_col = F.expr(base_cond) if isinstance(base_cond, str) else base_cond
-    ev = df.where(ts_col.isNotNull())
 
     def kernel(arrs):
+        # NULL-ts rows ride along only to keep their group; the scan
+        # sorts them first, so a group has some iff its first row does
+        t = arrs["t"]
+        if len(t) and pd.isna(t[0]):
+            live = ~pd.isna(t)
+            arrs = {name: a[live] for name, a in arrs.items()}
         # Arrow→pandas nulls arrive as None (object cols) or NaN; map both to None.
         vals = [
             None if v is None or (isinstance(v, float) and v != v) else str(v)
@@ -61,7 +70,7 @@ def sequence_next_node(
         return (next_node(vals, arrs["bc"], arrs["m"], direction, base, k),)
 
     return grouped_scan(
-        ev,
+        df,
         list(group_by),
         {
             "t": F.unix_micros(ts_col),

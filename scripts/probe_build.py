@@ -17,11 +17,15 @@ The session has the benchmark's settings (perfbench/run.py:
 that times the query (perfbench/workloads.py, full size); with ``--sf``
 it is an existing testdata directory. Each step's jobs are counted
 through its own status-tracker job group; jobs run outside the listed
-calls are printed as ``other``. ``--profile`` adds a cProfile of the
-warm run's construction.
+calls are printed as ``other``. Each build line and each ``--all``
+line also gives the py4j commands the build sent from the main thread
+(py4j's finalizer thread, which sends the garbage-collection deletes,
+is left out; the main-thread count repeats exactly on warm builds).
+``--profile`` adds a cProfile of the warm run's construction.
 """
 
 import argparse
+import contextlib
 import cProfile
 import functools
 import io
@@ -30,6 +34,7 @@ import pstats
 import shutil
 import sys
 import tempfile
+import threading
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -48,15 +53,40 @@ def _caller() -> str:
     return f"{f.f_code.co_filename[len(PACKAGE):]}:{f.f_lineno} {f.f_code.co_name}"
 
 
+class Py4jCommands:
+    """Counts the py4j commands sent from the main thread, except the
+    probe's own job-group calls (``uncounted``)."""
+
+    def __init__(self, spark):
+        client = spark.sparkContext._gateway._gateway_client
+        send, main = client.send_command, threading.main_thread()
+        self.n, self.paused = 0, False
+
+        def counted(*args, **kwargs):
+            if not self.paused and threading.current_thread() is main:
+                self.n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+
+    @contextlib.contextmanager
+    def uncounted(self):
+        self.paused = True
+        try:
+            yield
+        finally:
+            self.paused = False
+
+
 class Steps:
     """Wraps the calls that run Spark jobs during construction; each
     call runs under its own job group."""
 
-    def __init__(self, spark):
+    def __init__(self, spark, py4j):
         from pyspark.sql import DataFrameReader
         from pyspark.sql.classic.dataframe import DataFrame
 
-        self.sc = spark.sparkContext
+        self.sc, self.py4j = spark.sparkContext, py4j
         self.bus = self.sc._jsc.sc().listenerBus()
         self.group = None  # the phase's group, restored after each step
         self.steps = []  # (label, job group, seconds)
@@ -71,13 +101,15 @@ class Steps:
                 return fn(*args, **kwargs)
             group = f"{self.group}:{len(self.steps)}"
             label = f"{name} at {_caller()}"
-            self.sc.setJobGroup(group, group)
+            with self.py4j.uncounted():
+                self.sc.setJobGroup(group, group)
             t0 = time.perf_counter()
             try:
                 return fn(*args, **kwargs)
             finally:
                 self.steps.append((label, group, time.perf_counter() - t0))
-                self.sc.setJobGroup(self.group, self.group)
+                with self.py4j.uncounted():
+                    self.sc.setJobGroup(self.group, self.group)
 
         return step
 
@@ -90,16 +122,16 @@ class Steps:
         return len(self.sc.statusTracker().getJobIdsForGroup(group))
 
 
-def probe(spark, steps, fn, sf_dir, tag, profile):
+def probe(spark, steps, py4j, fn, sf_dir, tag, profile):
     steps.phase(f"{tag}:build")
     pr = cProfile.Profile() if profile else None
-    t0 = time.perf_counter()
+    n0, t0 = py4j.n, time.perf_counter()
     if pr:
         pr.enable()
     df = fn(spark, sf_dir)
     if pr:
         pr.disable()
-    t1 = time.perf_counter()
+    t1, commands = time.perf_counter(), py4j.n - n0
     built = list(steps.steps)
     steps.phase(f"{tag}:exec")
     df.write.format("noop").mode("overwrite").save()
@@ -108,7 +140,7 @@ def probe(spark, steps, fn, sf_dir, tag, profile):
     rows = [(steps.jobs(g), s, label) for label, g, s in built]
     other = steps.jobs(f"{tag}:build")
     build_jobs = other + sum(r[0] for r in rows)
-    print(f"{tag}: build {t1 - t0:.3f}s ({build_jobs} jobs)  "
+    print(f"{tag}: build {t1 - t0:.3f}s ({build_jobs} jobs, {commands} py4j)  "
           f"exec {t2 - t1:.3f}s ({steps.jobs(f'{tag}:exec')} jobs)")
     print(f"  {'jobs':>4} {'s':>7}  step")
     for n, s, label in rows:
@@ -120,21 +152,25 @@ def probe(spark, steps, fn, sf_dir, tag, profile):
         print(out.getvalue())
 
 
-def job_table(spark, steps, queries, sf_dir) -> None:
+def job_table(spark, steps, py4j, queries, sf_dir) -> None:
     """Build each query once (no execution) and print its construction
-    jobs, then the total."""
+    jobs and main-thread py4j commands, then the totals."""
     import run
 
-    total = 0
+    total = total_commands = 0
+    print(f"{'jobs':>4} {'py4j':>6}  query")
     for name, fn in queries.items():
         run.between_queries(spark)
         steps.phase(f"{name}:build")
+        n0 = py4j.n
         fn(spark, sf_dir)
+        commands = py4j.n - n0
         steps.group = None
         jobs = steps.jobs(f"{name}:build") + sum(steps.jobs(g) for _, g, _ in steps.steps)
         total += jobs
-        print(f"{jobs:>4}  {name}", flush=True)
-    print(f"{total:>4}  total over {len(queries)} queries")
+        total_commands += commands
+        print(f"{jobs:>4} {commands:>6}  {name}", flush=True)
+    print(f"{total:>4} {total_commands:>6}  total over {len(queries)} queries")
 
 
 def main(argv=None) -> int:
@@ -170,14 +206,15 @@ def main(argv=None) -> int:
             for w in workloads.WORKLOADS.values():
                 if set(args.queries) & set(w.query_names):
                     w.generate(args.seed, "full", sf_dir, run.CORES)
-        steps = Steps(spark)
+        py4j = Py4jCommands(spark)
+        steps = Steps(spark, py4j)
         qs = E.queries()
         if args.all:
-            job_table(spark, steps, qs, sf_dir)
+            job_table(spark, steps, py4j, qs, sf_dir)
         for name in args.queries:
             for rep in ("cold", "warm"):
                 run.between_queries(spark)
-                probe(spark, steps, qs[name], sf_dir, f"{name} {rep}",
+                probe(spark, steps, py4j, qs[name], sf_dir, f"{name} {rep}",
                       args.profile and rep == "warm")
     finally:
         run.stop_spark(spark)

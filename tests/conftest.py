@@ -59,3 +59,33 @@ def count_jobs(spark):
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture(scope="session")
+def count_py4j(spark):
+    """``count_py4j(fn)`` -> ``(fn(), n)``: the py4j commands ``fn`` sent
+    from the main thread. py4j's finalizer thread, which sends the
+    garbage-collection deletes whenever Python's collector runs, is
+    left out, so the count repeats exactly for a warm build."""
+    import threading
+
+    client = spark.sparkContext._gateway._gateway_client
+    main = threading.main_thread()
+
+    def run(fn):
+        send, n = client.send_command, 0
+
+        def counted(*args, **kwargs):
+            nonlocal n
+            if threading.current_thread() is main:
+                n += 1
+            return send(*args, **kwargs)
+
+        client.send_command = counted
+        try:
+            out = fn()
+        finally:
+            client.send_command = send
+        return out, n
+
+    return run

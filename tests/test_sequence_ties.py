@@ -101,3 +101,21 @@ def test_all_null_ts_group_present_kernel_complex_pattern(spark):
     got = {r.g: r.matched for r in B.sequence_match(
         df, "(?1)(?t<=10)(?2)", "ts", ["c0", "c1"], ["g"]).collect()}
     assert got == {1: True, 7: False}
+
+
+def test_all_null_ts_group_present_next_node(spark):
+    # the NULL-ts group gets one row with a NULL result, and a NULL-ts
+    # row is never the adjacent event: group 1's NULL-ts "x" rows sort
+    # first and must not be returned after (forward) or before
+    # (backward) the chain
+    schema = "g int, ts timestamp, v string, c0 boolean, c1 boolean"
+    df = spark.createDataFrame(
+        [(7, None, "n", True, False), (7, None, "m", False, True),
+         (1, None, "x", True, True), (1, T5, "a", True, False),
+         (1, T9, "b", False, True)],
+        schema,
+    )
+    for direction, want in (("forward", "b"), ("backward", None)):
+        got = {r.g: r.next_node for r in B.sequence_next_node(
+            df, direction, "first_match", "ts", "v", "c0", ["c0"], ["g"]).collect()}
+        assert got == {1: want, 7: None}, direction
