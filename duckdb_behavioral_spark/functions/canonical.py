@@ -11,7 +11,10 @@ verified Jaccard edges -> min-label connected components,
 functions/dedup.py + operators/graph.py — no all-pairs stage) joined
 to the map-side ``quality_score`` projection, then ONE groupBy
 (cluster_id) whose aggregation state is a single struct-max — the
-classic distributed argmax, no window, no sort. Output is one row
+classic distributed argmax, no window, no sort. Like the rest of the
+dedup path, both are built from SQL strings (one py4j call each, not
+one per Column node); ``canonical_quality`` restates the two
+``quality_score`` columns the pick orders by. Output is one row
 per multi-member cluster: bounded by the near-dup rate, not the
 corpus.
 
@@ -25,10 +28,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.functions.common import sql_tokens
-from duckdb_behavioral_spark.functions.dedup import _SQL_PAIR_CTES, dedup_clusters
-from duckdb_behavioral_spark.functions.text import quality_score
+from duckdb_behavioral_spark.functions.dedup import _SQL_PAIR_CTES, _SQL_TOKENS, dedup_clusters
 
 __all__ = ["dedup_canonical_pick", "q_dedup_canonical_pick", "CANONICAL_PICK_SQL"]
+
+
+def canonical_quality(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_tokens, distinct_permille): the two ``quality_score``
+    columns (functions/text.py) the pick orders by, as SQL text."""
+    return docs.selectExpr("doc_id", f"{_SQL_TOKENS} AS __toks").selectExpr(
+        "doc_id",
+        "CAST(size(__toks) AS BIGINT) AS n_tokens",
+        "CAST(floor(CAST(size(array_distinct(__toks)) AS BIGINT) * 1000"
+        " / CAST(size(__toks) AS BIGINT)) AS BIGINT) AS distinct_permille",
+    )
 
 
 def dedup_canonical_pick(
@@ -43,28 +56,20 @@ def dedup_canonical_pick(
     whole MinHash -> Jaccard -> CC pipeline."""
     if clusters is None:
         clusters = dedup_clusters(docs)
-    clusters = clusters.select("doc_id", "cluster_id")
-    quality = quality_score(docs).select("doc_id", "n_tokens", "distinct_permille")
-    j = clusters.join(quality, "doc_id")
-    best = F.max(
-        F.struct(
-            F.col("distinct_permille").alias("q"),
-            F.col("n_tokens").alias("nt"),
-            (-F.col("doc_id")).alias("nid"),
-        )
-    ).alias("__best")
+    j = clusters.selectExpr("doc_id", "cluster_id").join(canonical_quality(docs), "doc_id")
     picked = j.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members"), best
+        F.expr("CAST(count(1) AS BIGINT) AS n_members"),
+        F.expr("max(struct(distinct_permille AS q, n_tokens AS nt, -doc_id AS nid)) AS __best"),
     )
     return (
-        picked.where(F.col("n_members") >= 2)
-        .select(
+        picked.where("n_members >= 2")
+        .selectExpr(
             "cluster_id",
             "n_members",
-            (-F.col("__best.nid")).cast("long").alias("canonical_doc"),
-            F.col("__best.q").cast("long").alias("canonical_quality"),
+            "CAST(-__best.nid AS BIGINT) AS canonical_doc",
+            "CAST(__best.q AS BIGINT) AS canonical_quality",
         )
-        .orderBy("cluster_id")
+        .orderBy(F.expr("cluster_id"))
     )
 
 

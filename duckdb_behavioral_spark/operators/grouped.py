@@ -2,7 +2,8 @@
 
 Runs a per-group Python kernel over a DataFrame at scale:
 
-1. project only the needed columns (column pruning reaches the scan),
+1. project only the needed columns in one SQL-text ``selectExpr``
+   (column pruning reaches the scan; see operators/sqltext.py),
 2. hash-repartition by the group keys (one shuffle; AQE may coalesce),
 3. ``sortWithinPartitions(keys…, order)`` so each group is a contiguous,
    time-sorted run inside its partition (Spark's external sort spills,
@@ -29,9 +30,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duckdb_behavioral_spark.operators import sqltext
 
-def condition_bitmask(conds: Sequence[Column]) -> Column:
-    """Pack boolean condition columns into one LONG bitmask column.
+
+def condition_bitmask(conds: Sequence[str]) -> str:
+    """SQL text packing SQL-text boolean conditions into one BIGINT
+    bitmask (bit i = condition i); Column conditions go through
+    ``sqltext.inputs`` first.
 
     NULL conditions count as false (reference treats NULL conditions as
     false: src/ffi/retention.rs:84-87). Packing 32 bools into one long
@@ -42,17 +47,25 @@ def condition_bitmask(conds: Sequence[Column]) -> Column:
         raise ValueError("at least one condition required")
     if len(conds) > 32:
         raise ValueError(f"at most 32 conditions supported, got {len(conds)}")
-    mask = None
-    for i, c in enumerate(conds):
-        bit = F.when(F.coalesce(c, F.lit(False)), F.lit(1 << i)).otherwise(F.lit(0))
-        mask = bit if mask is None else mask.bitwiseOR(bit)
-    return mask.cast("long")
+    bits = " | ".join(f"CASE WHEN {c} THEN {1 << i} ELSE 0 END" for i, c in enumerate(conds))
+    return f"CAST({bits} AS BIGINT)"
+
+
+def masked_payload(ts: str, conds: Sequence[str]) -> dict[str, str]:
+    """The ``t``/``m`` payload of the pattern and funnel kernels, as SQL
+    text over a ts column and SQL-text conditions. A NULL-ts row gets
+    mask 0 and t 0 instead of being filtered: the kernels skip mask-0
+    rows, and the row keeps its group present in the output."""
+    return {
+        "t": f"coalesce({sqltext.event_micros(ts)}, 0)",
+        "m": f"CASE WHEN {ts} IS NOT NULL THEN {condition_bitmask(conds)} ELSE 0 END",
+    }
 
 
 def grouped_scan(
     df: DataFrame,
     keys: Sequence[str],
-    payload: dict[str, Column],
+    payload: dict[str, str | Column],
     order: str,
     kernel: Callable[[dict], tuple],
     result_fields: Sequence[T.StructField],
@@ -61,7 +74,8 @@ def grouped_scan(
 ) -> DataFrame:
     """Apply ``kernel`` once per group; returns keys + result columns.
 
-    ``payload`` maps payload column name → Column expression;
+    ``payload`` maps payload column name → SQL text or Column (one
+    ``selectExpr``; Columns are aliased first, see ``sqltext.inputs``);
     ``order`` names the payload column to sort by (ascending, nulls
     first) within each group. ``kernel`` receives a dict of numpy/object
     arrays (one entry per payload column, group-sliced, sorted) and
@@ -80,12 +94,16 @@ def grouped_scan(
         [T.StructField(f.name, f.dataType, f.nullable) for f in key_fields]
         + list(result_fields)
     )
-    proj = df.select(*[F.col(k) for k in keys], *[c.alias(n) for n, c in payload.items()])
+    df, exprs = sqltext.inputs(df, list(payload.values()))
+    proj = df.selectExpr(*[sqltext.name(k) for k in keys],
+                         *[f"{e} AS {sqltext.name(n)}" for n, e in zip(payload, exprs)])
+    # F.expr, not names: PySpark turns each name into an F.col node
+    key_cols = [F.expr(sqltext.name(k)) for k in keys]
     if num_partitions:
-        rep = proj.repartition(num_partitions, *keys)
+        rep = proj.repartition(num_partitions, *key_cols)
     else:
-        rep = proj.repartition(*keys)
-    srt = rep.sortWithinPartitions(*keys, order)
+        rep = proj.repartition(*key_cols)
+    srt = rep.sortWithinPartitions(*key_cols, F.expr(sqltext.name(order)))
 
     payload_names = list(payload.keys())
     result_names = [f.name for f in result_fields]

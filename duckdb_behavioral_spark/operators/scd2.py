@@ -54,14 +54,14 @@ def scd2_history(
     """
     t = event_time(ts)
     w = Window.partitionBy(entity).orderBy(t.asc())
+    # the previous state is its own column, so its lag is evaluated once
     marked = events.where(F.col(ts).isNotNull()).select(
         F.col(entity),
         F.col(state).alias("state"),
         t.alias("valid_from"),
-        (
-            F.lag(F.col(state)).over(w).isNull()
-            | (F.lag(F.col(state)).over(w) != F.col(state))
-        ).alias("__chg"),
+        F.lag(F.col(state)).over(w).alias("__prev"),
+    ).withColumn(
+        "__chg", F.col("__prev").isNull() | (F.col("__prev") != F.col("state"))
     )
     seg_w = Window.partitionBy(entity).orderBy(F.col("valid_from").asc())
     starts = marked.where(F.col("__chg")).select(

@@ -48,7 +48,8 @@ from pyspark.sql import types as T
 
 from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.kernels import pattern as P
-from duckdb_behavioral_spark.operators.grouped import condition_bitmask, grouped_scan
+from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark.operators.grouped import grouped_scan, masked_payload
 
 
 def _as_cols(conds: Sequence) -> list[Column]:
@@ -131,7 +132,7 @@ def _sequence(df, pattern_str, ts, conds, group_by, out, count_all, use_kernel,
         return _match_window(df, ts, cols, group_by, shape, cidx, out)
     if strategy == "hof":
         return _hof_path(df, ts, cols, group_by, shape, cidx, count_all, out)
-    return _kernel_path(df, steps, ts, cols, group_by, count_all, out)
+    return _kernel_path(df, steps, ts, conds, group_by, count_all, out)
 
 
 def _match_window(df, ts, cols, group_by, shape, cidx, out):
@@ -242,7 +243,10 @@ def _match_window_timed(df, ts, cols, group_by, timed, out):
     )
     cur = cur.withColumn("__x0", F.when(F.col(f"__b{cidx[0]}"), F.col("__tu")))
     for j in range(1, len(cidx)):
-        prev = F.max(f"__x{j-1}").over(w_prev)
+        # the running max is its own column, so its window is evaluated
+        # once even when the link bound tests it a second time
+        cur = cur.withColumn(f"__p{j}", F.max(f"__x{j-1}").over(w_prev))
+        prev = F.col(f"__p{j}")
         ok = F.col(f"__b{cidx[j]}") & prev.isNotNull()
         if bounds[j - 1] is not None:
             ok = ok & (prev >= F.col("__tu") - F.lit(bounds[j - 1]))
@@ -353,14 +357,7 @@ def _wildcard_count(arr, cidx, k):
 # Python NFA path
 # ---------------------------------------------------------------------------
 
-def _kernel_path(df, steps, ts, cols, group_by, count_all, out):
-    # NULL-out rows with a NULL timestamp (mask 0 is dropped inside the
-    # kernel) instead of filtering them: a group whose rows all have
-    # NULL timestamps must still appear in the output, matching the
-    # window/hof strategies (see _event_array docstring).
-    ts_col = event_time(ts)
-    ev = df
-
+def _kernel_path(df, steps, ts, conds, group_by, count_all, out):
     def kernel(arrs):
         m = arrs["m"]
         nz = m != 0
@@ -372,17 +369,11 @@ def _kernel_path(df, steps, ts, cols, group_by, count_all, out):
         if count_all
         else T.StructField(out, T.BooleanType(), False)
     )
-    return grouped_scan(
-        ev,
-        group_by,
-        {
-            "t": F.coalesce(F.unix_micros(ts_col), F.lit(0)),
-            "m": F.when(ts_col.isNotNull(), condition_bitmask(cols)).otherwise(F.lit(0)),
-        },
-        "t",
-        kernel,
-        [field],
-    )
+    # NULL-ts rows are masked to 0 rather than filtered: a group whose
+    # rows all have NULL timestamps must still appear in the output,
+    # matching the window/hof strategies (see _event_array docstring).
+    df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
+    return grouped_scan(df, group_by, masked_payload(t, conds), "t", kernel, [field])
 
 
 def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
@@ -404,7 +395,6 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
             raise
         return _null_result(df, group_by, out, "array<timestamp>")
     group_by = list(group_by)
-    ts_col = event_time(ts)
 
     shape, cidx = P.classify(steps)
     if shape == P.SHAPE_WILDCARD and not use_kernel:
@@ -418,13 +408,11 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
 
     # NULL-ts rows are masked to 0 (dropped inside the kernel) rather
     # than filtered, so all-NULL groups still emit an empty array.
+    ev, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
     got = grouped_scan(
-        df,
+        ev,
         group_by,
-        {
-            "t": F.coalesce(F.unix_micros(ts_col), F.lit(0)),
-            "m": F.when(ts_col.isNotNull(), condition_bitmask(cols)).otherwise(F.lit(0)),
-        },
+        masked_payload(t, conds),
         "t",
         kernel,
         [T.StructField("__us", T.ArrayType(T.LongType(), False), False)],

@@ -13,7 +13,7 @@ result, as in the SQL surface and the rest of the sequence family.
 
 Runs the exact kernel port (kernels/next_node.py) on the grouped
 mapInPandas engine; the value column rides along as the only string
-payload.
+payload. The payload projection is SQL text (operators/sqltext.py).
 """
 
 from __future__ import annotations
@@ -21,17 +21,12 @@ from __future__ import annotations
 from typing import Sequence
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.kernels.next_node import next_node, parse_base, parse_direction
+from duckdb_behavioral_spark.operators import sqltext
 from duckdb_behavioral_spark.operators.grouped import condition_bitmask, grouped_scan
-
-
-def _as_cols(conds: Sequence) -> list[Column]:
-    return [F.expr(c) if isinstance(c, str) else c for c in conds]
 
 
 def sequence_next_node(
@@ -47,13 +42,11 @@ def sequence_next_node(
 ) -> DataFrame:
     direction = parse_direction(direction)
     base = parse_base(base)
-    cols = _as_cols(conds)
-    k = len(cols)
+    k = len(conds)
     if not 1 <= k <= 32:
         raise ValueError(f"sequence_next_node takes 1..32 event conditions, got {k}")
-    ts_col = event_time(ts)
-    value_col = F.expr(value) if isinstance(value, str) else value
-    base_col = F.expr(base_cond) if isinstance(base_cond, str) else base_cond
+    df, (t, v, bc, *conds) = sqltext.inputs(
+        df, [sqltext.column(ts), value, base_cond, *conds])
 
     def kernel(arrs):
         # NULL-ts rows ride along only to keep their group; the scan
@@ -73,10 +66,10 @@ def sequence_next_node(
         df,
         list(group_by),
         {
-            "t": F.unix_micros(ts_col),
-            "v": value_col.cast("string"),
-            "bc": F.coalesce(base_col, F.lit(False)),
-            "m": condition_bitmask(cols),
+            "t": sqltext.event_micros(t),
+            "v": f"CAST({v} AS STRING)",
+            "bc": f"coalesce({bc}, false)",
+            "m": condition_bitmask(conds),
         },
         "t",
         kernel,

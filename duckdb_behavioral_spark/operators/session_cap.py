@@ -48,11 +48,10 @@ def session_hard_cap_report(
     sid = (
         base.withColumn(
             "__new",
-            F.when(
-                F.lag("t").over(w).isNull()
-                | (F.col("t") - F.lag("t").over(w) > gap_s),
-                1,
-            ).otherwise(0),
+            # t is never NULL here, so a NULL difference means the first
+            # event; one lag reference, so the window is evaluated once
+            F.when(F.coalesce(F.col("t") - F.lag("t").over(w) > gap_s, F.lit(True)), 1)
+            .otherwise(0),
         )
         .withColumn(
             "sid",

@@ -8,11 +8,17 @@ before the row plus one. Rows with NULL timestamps get a NULL session
 id but do not break neighboring sessions (src/sessionize.rs:290-298).
 
 The reference evaluates this through DuckDB's segment-tree window
-machinery; in Spark it reduces to ``lag`` + a running ``sum`` over
-``Window.partitionBy(keys).orderBy(ts)`` — no UDF, fully
-whole-stage-codegen'd, shuffles once on the partition keys. NULL
-timestamps sort first in Spark ascending order, so non-null rows only
-ever see non-null predecessors and the running sum is unaffected.
+machinery; in Spark it reduces to one ``lag`` + a running ``sum`` over
+``PARTITION BY keys ORDER BY ts`` — no UDF, fully whole-stage-codegen'd,
+shuffles once on the partition keys. NULL timestamps sort first in
+Spark ascending order, so non-null rows only ever see non-null
+predecessors and the running sum is unaffected.
+
+The expression is one SQL string (one py4j call instead of ~30 Column
+nodes), and the boundary test ``coalesce(t - lag(t) > gap, false)``
+reads the ``lag`` once: Catalyst does not merge two equal window
+functions, so a second reference (``lag(t) IS NOT NULL AND …``) would
+compute it twice per row (plan-gated in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -24,10 +30,12 @@ from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.functions.timeutil import event_time
+from duckdb_behavioral_spark.operators import sqltext
 
 
 def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
-    """Session-id Column for ``withColumn`` composition."""
+    """Session-id Column for ``withColumn`` composition. ``ts`` and the
+    partition keys are column names (one SQL expression) or Columns."""
     gap_us = to_micros(gap)
     # ORDER BY the raw column attribute, cast only inside unix_micros:
     # a cast in the window order key is extracted into per-window _w
@@ -35,13 +43,22 @@ def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
     # copies — the planner re-sorts between them instead of sharing one
     # sort (plan-asserted in tests/test_plans.py). NTZ and TIMESTAMP
     # order identically, so sorting the uncast column is equivalent.
+    if isinstance(ts, str) and all(isinstance(k, str) for k in partition_by):
+        t = sqltext.name(ts)
+        over = f"PARTITION BY {sqltext.names(partition_by)} ORDER BY {t}"
+        tsu = sqltext.event_micros(t)
+        return F.expr(
+            f"CASE WHEN {t} IS NOT NULL THEN sum(CASE WHEN coalesce("
+            f"{tsu} - lag({tsu}) OVER ({over}) > {gap_us}, false) THEN 1 ELSE 0 END) "
+            f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 END"
+        )
     ts_col = F.col(ts) if isinstance(ts, str) else ts
     w = Window.partitionBy(*partition_by).orderBy(ts_col.asc())
     tsu = F.unix_micros(event_time(ts_col))
-    prev = F.lag(tsu).over(w)
-    boundary = F.when(prev.isNotNull() & ((tsu - prev) > F.lit(gap_us)), 1).otherwise(0)
-    running = F.sum(boundary).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return F.when(ts_col.isNotNull(), running + 1).otherwise(F.lit(None).cast("long"))
+    cut = F.coalesce(tsu - F.lag(tsu).over(w) > F.lit(gap_us), F.lit(False))
+    running = F.sum(cut.cast("int")).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return F.when(ts_col.isNotNull(), running + 1)
 
 
 def sessionize(
@@ -52,4 +69,4 @@ def sessionize(
     out: str = "session_id",
 ) -> DataFrame:
     """Append a session-id column computed per partition key."""
-    return df.withColumn(out, sessionize_col(ts, gap, [F.col(c) for c in partition_by]))
+    return df.withColumns({out: sessionize_col(ts, gap, list(partition_by))})

@@ -20,6 +20,10 @@ Three physical strategies, picked automatically:
    steps ≥2 read frame ``(-∞, 0)`` (same-event multi-step advance).
    One shuffle, one sort, k native window passes, **no per-group
    arrays** — group size is unbounded, unlike any collect-based plan.
+   Each step is one SQL-text projection that computes its running max
+   into a column (``__m{s}``) and tests it afterwards: Catalyst does
+   not merge equal window functions, so testing and returning the
+   same ``max(...) OVER`` inline would evaluate it twice per row.
 
 2. **Aggregate-HOF path:** the same DP folded over
    ``sort_array(collect_list(...))`` with the SQL ``aggregate``
@@ -38,6 +42,10 @@ hypothesis-tested against the kernel (tests/test_property_kernels.py).
 Both paths pre-filter events matching no condition (they can never
 participate — reference: src/window_funnel.rs:249-255) and pack/prune
 columns before the shuffle.
+
+The window and kernel paths build their stages as SQL strings
+(operators/sqltext.py); conditions given as Columns are aliased once
+and named in the text. The HOF path keeps its Column lambdas.
 """
 
 from __future__ import annotations
@@ -51,7 +59,8 @@ from pyspark.sql import types as T
 from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.kernels.funnel import funnel_max_step, parse_modes
-from duckdb_behavioral_spark.operators.grouped import condition_bitmask, grouped_scan
+from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark.operators.grouped import grouped_scan, masked_payload
 
 _SENTINEL = -(2**62)
 _HOF_MAX_CONDS = 8
@@ -80,8 +89,7 @@ def window_funnel(
     ``max_events_per_group`` is the opt-in skew guard: only the first N
     events (by timestamp) per group are scanned ('hof'/'kernel' only).
     """
-    cols = _as_cols(conds)
-    k = len(cols)
+    k = len(conds)
     if not 2 <= k <= 32:
         raise ValueError(f"window_funnel takes 2..32 conditions, got {k}")
     window_us = to_micros(window)
@@ -117,69 +125,54 @@ def window_funnel(
             "(optionally with strict_once)"
         )
 
-    if strategy == "window":
-        return _funnel_window(df, window_us, ts, cols, list(group_by), k, out)
-    if strategy == "window_strict":
-        return _funnel_window(df, window_us, ts, cols, list(group_by), k, out,
-                              strict_increase=True)
     if strategy == "hof":
         if k > _HOF_MAX_CONDS:
             raise ValueError(f"hof strategy supports at most {_HOF_MAX_CONDS} conditions")
-        return _funnel_hof(df, window_us, ts, cols, list(group_by), k, out,
+        return _funnel_hof(df, window_us, ts, _as_cols(conds), list(group_by), k, out,
                            max_events_per_group)
-    return _funnel_kernel(df, window_us, ts, cols, list(group_by), k, mode_bits, out,
+    df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
+    if strategy in ("window", "window_strict"):
+        return _funnel_window(df, window_us, t, conds, list(group_by), k, out,
+                              strict_increase=strategy == "window_strict")
+    return _funnel_kernel(df, window_us, t, conds, list(group_by), k, mode_bits, out,
                           max_events_per_group)
 
 
-def _funnel_window(df, window_us, ts, cols, group_by, k, out, strict_increase=False):
-    from pyspark.sql import Window
-
-    ts_col = event_time(ts)
-    tsu = F.unix_micros(ts_col)
-    base = df.select(
-        *group_by,
-        tsu.alias("__t"),
-        *[F.coalesce(cols[s], F.lit(False)).alias(f"__c{s}") for s in range(k)],
+def _funnel_window(df, window_us, t, conds, group_by, k, out, strict_increase=False):
+    """``t`` and ``conds`` are SQL text over ``df`` (sqltext.inputs)."""
+    keys = sqltext.names(group_by)
+    tsu = sqltext.event_micros(t)
+    cur = df.selectExpr(
+        *[sqltext.name(g) for g in group_by],
+        f"{tsu} AS __t",
+        *[f"coalesce({c}, false) AS __c{s}" for s, c in enumerate(conds) if s],
+        # dp0 contribution: this row as an entry point. Last: with the
+        # long after the flags the shuffled rows compress ~10 % better.
+        f"CASE WHEN {conds[0]} THEN {tsu} END AS __x0",
     )
-    w_prev = (
-        Window.partitionBy(*group_by)
-        .orderBy(F.col("__t").asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_cur = (
-        Window.partitionBy(*group_by)
-        .orderBy(F.col("__t").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    # strict_increase: every step needs a strictly EARLIER-TS
-    # predecessor — a RANGE frame excludes same-ts rows even under tie
-    # ordering (a ROWS frame would not)
-    w_strict = (
-        Window.partitionBy(*group_by)
-        .orderBy(F.col("__t").asc())
-        .rangeBetween(Window.unboundedPreceding, -1)
-    )
-    # dp0 contribution: this row as an entry point.
-    cur = base.withColumn("__x0", F.when(F.col("__c0"), F.col("__t")))
-    prev_col = None
+    order = f"PARTITION BY {keys} ORDER BY __t"
+    # x[s]: this row's chain entry time when it reaches step s+1, else
+    # NULL; m[s] is the running max of x[s-1] it chains from. Each m[s]
+    # is its own column, so its window is evaluated once and then tested.
+    x = ["__x0"]
     for s in range(1, k):
         if strict_increase:
-            prev_col = F.max(f"__x{s-1}").over(w_strict)
+            # strict_increase: every step needs a strictly EARLIER-TS
+            # predecessor — a RANGE frame excludes same-ts rows even
+            # under tie ordering (a ROWS frame would not)
+            frame = "RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
         elif s == 1:
             # step 1 chains from a strictly earlier entry: frame (-∞,-1)
-            prev_col = F.max("__x0").over(w_prev)
+            frame = "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"
         else:
             # steps ≥2 may chain through this same event: frame (-∞,0)
-            prev_col = F.max(f"__x{s-1}").over(w_cur)
-        contrib = F.when(
-            F.col(f"__c{s}") & (prev_col >= F.col("__t") - F.lit(window_us)), prev_col
-        )
-        cur = cur.withColumn(f"__x{s}", contrib)
-    reached = [F.bool_or(F.col(f"__x{s}").isNotNull()) for s in range(k)]
-    step = F.when(reached[k - 1], k)
-    for s in range(k - 2, -1, -1):
-        step = step.when(reached[s], s + 1)
-    return cur.groupBy(*group_by).agg(step.otherwise(0).cast("int").alias(out))
+            frame = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+        cur = cur.selectExpr("*", f"max({x[s - 1]}) OVER ({order} {frame}) AS __m{s}")
+        x.append(f"CASE WHEN __c{s} AND __m{s} >= __t - {window_us} THEN __m{s} END")
+    step = " ".join(f"WHEN bool_or({x[s]} IS NOT NULL) THEN {s + 1}"
+                    for s in range(k - 1, -1, -1))
+    return cur.groupBy(*group_by).agg(
+        F.expr(f"CAST(CASE {step} ELSE 0 END AS INT) AS {sqltext.name(out)}"))
 
 
 def _funnel_hof(df, window_us, ts, cols, group_by, k, out, cap=None):
@@ -230,7 +223,7 @@ def _funnel_hof(df, window_us, ts, cols, group_by, k, out, cap=None):
     return ev.groupBy(*group_by).agg(result.alias(out))
 
 
-def _funnel_kernel(df, window_us, ts, cols, group_by, k, mode_bits, out, cap=None):
+def _funnel_kernel(df, window_us, t, conds, group_by, k, mode_bits, out, cap=None):
     # All-false events can never match a step or trigger a break, so
     # they are semantically inert for the funnel scan — but keeping them
     # preserves group presence (step 0) for groups with no qualifying
@@ -238,18 +231,13 @@ def _funnel_kernel(df, window_us, ts, cols, group_by, k, mode_bits, out, cap=Non
     # NULL-ts rows are masked to 0 (inert) rather than filtered so a
     # group whose rows all have NULL timestamps still surfaces (step 0),
     # matching the window/hof strategies.
-    ts_col = event_time(ts)
-
     def kernel(arrs):
         return (funnel_max_step(arrs["t"], arrs["m"], window_us, k, mode_bits),)
 
     return grouped_scan(
         df,
         group_by,
-        {
-            "t": F.coalesce(F.unix_micros(ts_col), F.lit(0)),
-            "m": F.when(ts_col.isNotNull(), condition_bitmask(cols)).otherwise(F.lit(0)),
-        },
+        masked_payload(t, conds),
         "t",
         kernel,
         [T.StructField(out, T.IntegerType(), False)],

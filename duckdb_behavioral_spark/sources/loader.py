@@ -37,6 +37,9 @@ and directories without a data file keep Spark's inference.
 
 from __future__ import annotations
 
+import weakref
+from types import SimpleNamespace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -62,10 +65,11 @@ def normalize_timestamps(df: DataFrame, nanos_cols: list[str] = ()) -> DataFrame
     """Coerce every timestamp-ish column to plain TimestampType."""
     repl = {}
     for field in df.schema.fields:
+        name = "`" + field.name.replace("`", "``") + "`"
         if field.name in nanos_cols and isinstance(field.dataType, T.LongType):
-            repl[field.name] = F.timestamp_micros(F.expr(f"`{field.name}` div 1000"))
+            repl[field.name] = F.expr(f"timestamp_micros({name} div 1000)")
         elif isinstance(field.dataType, T.TimestampNTZType):
-            repl[field.name] = F.col(field.name).cast(T.TimestampType())
+            repl[field.name] = F.expr(f"CAST({name} AS TIMESTAMP)")
     return df.withColumns(repl) if repl else df
 
 
@@ -91,16 +95,44 @@ def normalize_timestamps(df: DataFrame, nanos_cols: list[str] = ()) -> DataFrame
 _FANOUT_TABLES = {"documents"}
 
 
+# Per py4j gateway: the JVM classes and static members the footer read
+# uses. Each dotted JVM name costs one reflection command per segment
+# (``jvm.org.apache.hadoop.fs.Path`` is 5), so they are resolved once;
+# the footer itself is still read on every call.
+_FOOTER_JVM = weakref.WeakKeyDictionary()
+
+
+def _footer_jvm(spark: SparkSession) -> SimpleNamespace:
+    client = spark._jvm._gateway_client
+    found = _FOOTER_JVM.get(client)
+    if found is None:
+        jvm = spark._jvm
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        hadoop = jvm.org.apache.parquet.hadoop
+        found = _FOOTER_JVM[client] = SimpleNamespace(
+            Path=jvm.org.apache.hadoop.fs.Path,
+            Footer=hadoop.Footer,
+            readFooter=hadoop.ParquetFileReader.readFooter,
+            SKIP_ROW_GROUPS=(
+                jvm.org.apache.parquet.format.converter.ParquetMetadataConverter
+                .SKIP_ROW_GROUPS),
+            readSchemaFromFooter=pq.ParquetFileFormat.readSchemaFromFooter,
+            ParquetToSparkSchemaConverter=pq.ParquetToSparkSchemaConverter,
+        )
+    return found
+
+
 def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     """The schema Spark's parquet inference would give ``path``, read
     from one footer without a Spark job; None when inference must
     decide (see the module docstring)."""
-    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
-    if state.conf().isParquetSchemaMergingEnabled():
+    state = spark._jsparkSession.sessionState()
+    sql_conf = state.conf()
+    if sql_conf.isParquetSchemaMergingEnabled():
         return None  # inference reads every footer
+    j = _footer_jvm(spark)
     conf = state.newHadoopConf()
-    Path = jvm.org.apache.hadoop.fs.Path
-    root = Path(path)
+    root = j.Path(path)
     fs = root.getFileSystem(conf)
     if not fs.exists(root):
         return None  # Spark raises its own path-not-found error
@@ -108,23 +140,14 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     if status.isDirectory():
         # summaries first, then the first visible entry by name
         # (globStatus sorts; "[!_.]*" skips the hidden files Spark skips)
-        globs = (fs.globStatus(Path(root, g))
+        globs = (fs.globStatus(j.Path(root, g))
                  for g in ("_common_metadata", "_metadata", "[!_.]*"))
         found = next((g for g in globs if g), None)
         if found is None or found[0].isDirectory():
             return None  # no data file, or partition discovery adds columns
         status = found[0]
-    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
-    footer = jvm.org.apache.parquet.hadoop.Footer(
-        status.getPath(),
-        jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            conf, status,
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-        ),
-    )
-    schema = pq.ParquetFileFormat.readSchemaFromFooter(
-        footer, pq.ParquetToSparkSchemaConverter(state.conf())
-    )
+    footer = j.Footer(status.getPath(), j.readFooter(conf, status, j.SKIP_ROW_GROUPS))
+    schema = j.readSchemaFromFooter(footer, j.ParquetToSparkSchemaConverter(sql_conf))
     return T._parse_datatype_json_string(schema.json())
 
 

@@ -48,7 +48,13 @@ def _sorted_pair(ts, mask):
 
 
 def register(spark: SparkSession) -> None:
-    """Register the behavioral SQL functions on this session."""
+    """Register the behavioral SQL functions on this session, unless
+    they are registered already: ``behavioral_sql`` calls this before
+    every statement, and registering the five pandas UDFs costs ~90
+    py4j round trips. ``seq_next_node`` is registered last, so its
+    presence means all five are."""
+    if spark.catalog.functionExists("seq_next_node"):
+        return
 
     @F.pandas_udf(T.IntegerType())
     def wf_step(window_us: pd.Series, mode: pd.Series, ts: pd.Series,

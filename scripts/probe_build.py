@@ -8,6 +8,7 @@ without executing it, and prints one line of construction jobs per
 query plus their total.
 
     python scripts/probe_build.py --seed 7 dedup_clusters
+    python scripts/probe_build.py --seed 7 q9_next_node_forward sql:q9_next_node_forward
     python scripts/probe_build.py --sf <sf_dir> <query> [<query>...] [--profile]
     python scripts/probe_build.py --sf <sf_dir> --all
 
@@ -15,7 +16,10 @@ The session has the benchmark's settings (perfbench/run.py:
 ``local[3]``, 6 shuffle partitions, 2 GB heap, C1-only JIT). With
 ``--seed N`` the input is the benchmark's seeded input of the workload
 that times the query (perfbench/workloads.py, full size); with ``--sf``
-it is an existing testdata directory. Each step's jobs are counted
+it is an existing testdata directory. Besides the declared queries, it
+probes the benchmark's ``behavioral_sql`` forms under the benchmark's
+names (``sql:q9_next_node_forward``: the events view plus the rewritten
+statement). Each step's jobs are counted
 through its own status-tracker job group; jobs run outside the listed
 calls are printed as ``other``. Each build line and each ``--all``
 line also gives the py4j commands the build sent from the main thread
@@ -193,6 +197,10 @@ def main(argv=None) -> int:
 
     import __spark_entry__ as E
 
+    # the benchmark's behavioral_sql forms, named as it names them
+    # (sql:<declared query>), built like the declared queries
+    sql_forms = {q.name: q.build for w in workloads.WORKLOADS.values()
+                 for q in w.queries() if q.layer == "sql"}
     work = tempfile.mkdtemp(prefix="probe_build-")
     # the kernel-path queries' Python workers import the package
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -204,13 +212,15 @@ def main(argv=None) -> int:
         if sf_dir is None:
             sf_dir = os.path.join(work, "data")
             for w in workloads.WORKLOADS.values():
-                if set(args.queries) & set(w.query_names):
+                timed = {*w.query_names, *(f"sql:{n}" for n in w.sql_forms)}
+                if set(args.queries) & timed:
                     w.generate(args.seed, "full", sf_dir, run.CORES)
         py4j = Py4jCommands(spark)
         steps = Steps(spark, py4j)
         qs = E.queries()
         if args.all:
             job_table(spark, steps, py4j, qs, sf_dir)
+        qs.update(sql_forms)
         for name in args.queries:
             for rep in ("cold", "warm"):
                 run.between_queries(spark)

@@ -102,7 +102,7 @@ CONSTRUCTION_JOBS = [
     # dedup_clusters' jobs and no more: the pick is one grouped max
     # in the execution plan
     ("dedup_canonical_pick", 14),
-    ("q1_sessionize", 0),
+    ("q1_sessionize", 77),
     # no barrier: a job here is a partition count or a second spread
     # policy downstream of the loader
     ("text_quality", 0),
@@ -124,15 +124,25 @@ def test_construction_jobs_within_budget(spark, count_jobs, sf_dir, name, budget
     )
 
 
-# py4j commands the main thread sends while a WARM dedup_clusters
-# DataFrame is built at sf0.001 (the first build pays one-off JVM
-# class lookups). Every projection, aggregate and filter of the path is
-# a SQL string; a Column node costs several round trips (PySpark 4
-# captures the session, a conf value and the call site per node), so
-# a path rebuilt from Column nodes shows here first. The count repeats
-# exactly for a fixed input and PySpark version (2,134 with the path
-# built from Column nodes); ``scripts/probe_build.py`` prints it.
-PY4J_COMMANDS = [("dedup_clusters", 381)]
+# py4j commands the main thread sends while a WARM DataFrame is built
+# at sf0.001 (the first build pays one-off JVM class lookups). Every
+# projection, aggregate and filter of these paths is a SQL string, and
+# the loader resolves its JVM classes once per gateway; a Column node
+# costs several round trips (PySpark 4 captures the session, a conf
+# value and the call site per node), so a path rebuilt from Column
+# nodes shows here first. The counts repeat exactly for a fixed input
+# and PySpark version; ``scripts/probe_build.py`` prints them. Counts
+# with the paths built from Column nodes in parentheses
+# (dedup_clusters: 381 with its SQL strings but the loader's JVM
+# classes looked up on every call).
+PY4J_COMMANDS = [
+    ("dedup_clusters", 347),  # (2,134)
+    ("dedup_canonical_pick", 454),  # (1,053)
+    ("q1_sessionize", 77),  # (329)
+    ("q3_window_funnel", 87),  # (710)
+    ("q9_next_node_forward", 113),  # (401)
+    ("q16_funnel_allow_reentry", 107),  # (430)
+]
 
 
 @pytest.mark.parametrize("name,budget", PY4J_COMMANDS, ids=[n for n, _ in PY4J_COMMANDS])
@@ -145,4 +155,27 @@ def test_build_py4j_commands_within_budget(spark, count_py4j, sf_dir, name, budg
     assert commands <= budget, (
         f"{name} sent {commands} py4j commands while its DataFrame was built "
         f"at {sf_dir} (budget {budget}); see scripts/probe_build.py"
+    )
+
+
+# q9 in the reference dialect, as the SQL surface takes it
+Q9_SQL_FORM = (
+    "SELECT user_id, sequence_next_node('forward', 'first_match', ts, event_type, "
+    "event_type = 'signup', event_type = 'signup', event_type = 'view') AS next_ev "
+    "FROM events GROUP BY user_id"
+)
+
+
+def test_behavioral_sql_py4j_commands_within_budget(spark, count_py4j, sf_dir):
+    """A second ``behavioral_sql`` statement on a session: the rewrite,
+    the catalog lookups and ``spark.sql``, with the UDFs registered by
+    the first (re-registering them cost ~150 commands)."""
+    from duckdb_behavioral_spark.sources import load_events
+    from duckdb_behavioral_spark.sql_surface import behavioral_sql
+
+    load_events(spark, sf_dir).createOrReplaceTempView("events")
+    behavioral_sql(spark, Q9_SQL_FORM)
+    _, commands = count_py4j(lambda: behavioral_sql(spark, Q9_SQL_FORM))
+    assert commands <= 6, (
+        f"a second behavioral_sql call sent {commands} py4j commands (budget 6)"
     )

@@ -375,3 +375,88 @@ def test_no_duplicated_expensive_subtree_after_barriers(spark, sf):
         assert plan.count("Generate explode") == n_explodes, fn.__name__
         assert plan.count("Generate posexplode") == n_posexplodes, fn.__name__
         assert "Scan ExistingRDD" in plan, fn.__name__
+
+
+def _duplicated_window_functions(df) -> list:
+    """Window functions that one Window node of the optimized plan
+    evaluates more than once. Catalyst does not merge two equal window
+    expressions, so a Column reused in one expression (a ``lag`` tested
+    and then subtracted, a running max tested and then returned) is
+    computed twice per row."""
+    dups, stack = [], [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+        if node.nodeName() != "Window":
+            continue
+        seen = set()
+        exprs = node.windowExpressions()
+        for i in range(exprs.size()):
+            fn = exprs.apply(i).child().canonicalized().toString()
+            if fn in seen:
+                dups.append(fn)
+            seen.add(fn)
+    return dups
+
+
+# every declared query with a window over the events, by its key in
+# __spark_entry__.queries()
+WINDOWED_QUERIES = [
+    "q1_sessionize", "q2_retention", "q3_window_funnel", "q4_window_funnel_modes",
+    "q5_sequence_match_adjacent", "q6_sequence_match_time", "q7_sequence_count",
+    "q8_sequence_match_events", "q9_next_node_forward", "q10_next_node_backward",
+    "q11_session_stats", "q12_funnel_dropoff", "q13_funnel_strict",
+    "q14_funnel_strict_order", "q15_funnel_timestamp_dedup",
+    "q16_funnel_allow_reentry", "q17_session_quantiles", "q18_session_paths",
+    "sequence_time_gate_mix", "user_state_scd2", "scd2_point_in_time",
+    "scd2_snapshot_diff", "session_hard_cap", "session_trigrams_topk",
+]
+
+
+@pytest.mark.parametrize("name", WINDOWED_QUERIES)
+def test_each_window_function_evaluated_once(spark, sf, name):
+    import __spark_entry__ as entry
+
+    dups = _duplicated_window_functions(entry.queries()[name](spark, sf))
+    assert dups == [], f"{name} evaluates these window functions twice: {dups}"
+
+
+def test_column_inputs_match_sql_text_inputs(spark, sf):
+    """The operators build SQL text; a Column input (ts, condition,
+    value) is aliased once and named in the text, so it gives the same
+    rows as its SQL-text form and still evaluates each window once."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    import duckdb_behavioral_spark as B
+    from duckdb_behavioral_spark.sources import load_events
+
+    ev = load_events(spark, sf)
+    kinds = ("view", "click", "purchase")
+    text = [f"event_type = '{k}'" for k in kinds]
+    cols = [F.col("event_type") == k for k in kinds]
+    ts = F.col("ts")
+
+    def forms(build):
+        return build("ts", text, "event_type"), build(ts, cols, F.col("event_type"))
+
+    cases = [
+        forms(lambda t, c, v: ev.select(
+            "user_id", "ts",
+            B.sessionize_col(t, "30 minutes",
+                             ["user_id" if isinstance(t, str) else F.col("user_id")])
+            .alias("sid"))),
+        forms(lambda t, c, v: B.window_funnel(ev, "1 hour", t, c, ["user_id"])),
+        forms(lambda t, c, v: B.window_funnel(ev, "1 hour", t, c, ["user_id"],
+                                              mode="strict_increase")),
+        forms(lambda t, c, v: B.window_funnel(ev, "1 hour", t, c, ["user_id"],
+                                              mode="allow_reentry")),
+        forms(lambda t, c, v: B.sequence_next_node(
+            ev, "forward", "first_match", t, v, c[0], c[:2], ["user_id"])),
+    ]
+    for text_form, col_form in cases:
+        assert _duplicated_window_functions(col_form) == []
+        assert Counter(map(tuple, col_form.collect())) == Counter(
+            map(tuple, text_form.collect()))
