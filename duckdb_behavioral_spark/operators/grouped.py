@@ -3,7 +3,7 @@
 Runs a per-group Python kernel over a DataFrame at scale:
 
 1. project only the needed columns in one SQL-text ``selectExpr``
-   (column pruning reaches the scan; see operators/sqltext.py),
+   (column pruning reaches the scan; see the sqltext module),
 2. hash-repartition by the group keys (one shuffle; AQE may coalesce),
 3. ``sortWithinPartitions(keys…, order)`` so each group is a contiguous,
    time-sorted run inside its partition (Spark's external sort spills,
@@ -30,13 +30,14 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark import sqltext
 
 
-def condition_bitmask(conds: Sequence[str]) -> str:
-    """SQL text packing SQL-text boolean conditions into one BIGINT
-    bitmask (bit i = condition i); Column conditions go through
-    ``sqltext.inputs`` first.
+def condition_bitmask(conds: Sequence[str | Column]) -> str | Column:
+    """Pack boolean conditions into one BIGINT bitmask (bit i =
+    condition i). SQL-text conditions give SQL text (one parse on the
+    JVM); if any condition is a Column the mask is a Column, with the
+    text conditions parsed by ``F.expr``.
 
     NULL conditions count as false (reference treats NULL conditions as
     false: src/ffi/retention.rs:84-87). Packing 32 bools into one long
@@ -47,8 +48,15 @@ def condition_bitmask(conds: Sequence[str]) -> str:
         raise ValueError("at least one condition required")
     if len(conds) > 32:
         raise ValueError(f"at most 32 conditions supported, got {len(conds)}")
-    bits = " | ".join(f"CASE WHEN {c} THEN {1 << i} ELSE 0 END" for i, c in enumerate(conds))
-    return f"CAST({bits} AS BIGINT)"
+    if all(isinstance(c, str) for c in conds):
+        bits = " | ".join(f"CASE WHEN {c} THEN {1 << i} ELSE 0 END" for i, c in enumerate(conds))
+        return f"CAST({bits} AS BIGINT)"
+    mask = None
+    for i, c in enumerate(conds):
+        c = F.expr(c) if isinstance(c, str) else c
+        bit = F.when(F.coalesce(c, F.lit(False)), F.lit(1 << i)).otherwise(F.lit(0))
+        mask = bit if mask is None else mask.bitwiseOR(bit)
+    return mask.cast("long")
 
 
 def masked_payload(ts: str, conds: Sequence[str]) -> dict[str, str]:

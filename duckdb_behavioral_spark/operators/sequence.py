@@ -48,7 +48,7 @@ from pyspark.sql import types as T
 
 from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.kernels import pattern as P
-from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark import sqltext
 from duckdb_behavioral_spark.operators.grouped import grouped_scan, masked_payload
 
 

@@ -13,7 +13,8 @@ result, as in the SQL surface and the rest of the sequence family.
 
 Runs the exact kernel port (kernels/next_node.py) on the grouped
 mapInPandas engine; the value column rides along as the only string
-payload. The payload projection is SQL text (operators/sqltext.py).
+payload. The payload projection is SQL text
+(``duckdb_behavioral_spark.sqltext``).
 """
 
 from __future__ import annotations
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from duckdb_behavioral_spark.kernels.next_node import next_node, parse_base, parse_direction
-from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark import sqltext
 from duckdb_behavioral_spark.operators.grouped import condition_bitmask, grouped_scan
 
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.functions.timeutil import event_time
-from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark import sqltext
 
 
 def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
@@ -45,7 +45,7 @@ def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
     # order identically, so sorting the uncast column is equivalent.
     if isinstance(ts, str) and all(isinstance(k, str) for k in partition_by):
         t = sqltext.name(ts)
-        over = f"PARTITION BY {sqltext.names(partition_by)} ORDER BY {t}"
+        over = f"{sqltext.partition_by(partition_by)}ORDER BY {t}"
         tsu = sqltext.event_micros(t)
         return F.expr(
             f"CASE WHEN {t} IS NOT NULL THEN sum(CASE WHEN coalesce("

@@ -44,8 +44,8 @@ participate — reference: src/window_funnel.rs:249-255) and pack/prune
 columns before the shuffle.
 
 The window and kernel paths build their stages as SQL strings
-(operators/sqltext.py); conditions given as Columns are aliased once
-and named in the text. The HOF path keeps its Column lambdas.
+(``duckdb_behavioral_spark.sqltext``); conditions given as Columns are
+aliased once and named in the text. The HOF path keeps its Column lambdas.
 """
 
 from __future__ import annotations
@@ -59,7 +59,7 @@ from pyspark.sql import types as T
 from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.kernels.funnel import funnel_max_step, parse_modes
-from duckdb_behavioral_spark.operators import sqltext
+from duckdb_behavioral_spark import sqltext
 from duckdb_behavioral_spark.operators.grouped import grouped_scan, masked_payload
 
 _SENTINEL = -(2**62)
@@ -140,7 +140,6 @@ def window_funnel(
 
 def _funnel_window(df, window_us, t, conds, group_by, k, out, strict_increase=False):
     """``t`` and ``conds`` are SQL text over ``df`` (sqltext.inputs)."""
-    keys = sqltext.names(group_by)
     tsu = sqltext.event_micros(t)
     cur = df.selectExpr(
         *[sqltext.name(g) for g in group_by],
@@ -150,7 +149,7 @@ def _funnel_window(df, window_us, t, conds, group_by, k, out, strict_increase=Fa
         # long after the flags the shuffled rows compress ~10 % better.
         f"CASE WHEN {conds[0]} THEN {tsu} END AS __x0",
     )
-    order = f"PARTITION BY {keys} ORDER BY __t"
+    order = f"{sqltext.partition_by(group_by)}ORDER BY __t"
     # x[s]: this row's chain entry time when it reaches step s+1, else
     # NULL; m[s] is the running max of x[s-1] it chains from. Each m[s]
     # is its own column, so its window is evaluated once and then tested.

@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from duckdb_behavioral_spark import sqltext
+
 # Columns that are TIMESTAMP(NANOS) in some driver-generated testdata.
 _NANOS_TS_COLS = {"events": ["ts"]}
 
@@ -65,7 +67,7 @@ def normalize_timestamps(df: DataFrame, nanos_cols: list[str] = ()) -> DataFrame
     """Coerce every timestamp-ish column to plain TimestampType."""
     repl = {}
     for field in df.schema.fields:
-        name = "`" + field.name.replace("`", "``") + "`"
+        name = sqltext.name(field.name)
         if field.name in nanos_cols and isinstance(field.dataType, T.LongType):
             repl[field.name] = F.expr(f"timestamp_micros({name} div 1000)")
         elif isinstance(field.dataType, T.TimestampNTZType):

@@ -1,4 +1,5 @@
-"""SQL-text building blocks for the operators' projections.
+"""SQL-text building blocks for the operators' projections and the
+loader's casts.
 
 Under PySpark 4 every Column node (``F.col``, ``F.when``, ``.alias``,
 Column arithmetic) is a py4j round trip or several, while a
@@ -23,6 +24,12 @@ def name(column: str) -> str:
 
 def names(columns: Sequence[str]) -> str:
     return ", ".join(name(c) for c in columns)
+
+
+def partition_by(keys: Sequence[str]) -> str:
+    """The ``PARTITION BY`` clause of a window over ``keys``, with a
+    trailing space; no clause (one partition) when ``keys`` is empty."""
+    return f"PARTITION BY {names(keys)} " if keys else ""
 
 
 def column(c: str | Column) -> str | Column:

@@ -102,7 +102,7 @@ CONSTRUCTION_JOBS = [
     # dedup_clusters' jobs and no more: the pick is one grouped max
     # in the execution plan
     ("dedup_canonical_pick", 14),
-    ("q1_sessionize", 77),
+    ("q1_sessionize", 0),
     # no barrier: a job here is a partition count or a second spread
     # policy downstream of the loader
     ("text_quality", 0),
@@ -169,7 +169,7 @@ Q9_SQL_FORM = (
 def test_behavioral_sql_py4j_commands_within_budget(spark, count_py4j, sf_dir):
     """A second ``behavioral_sql`` statement on a session: the rewrite,
     the catalog lookups and ``spark.sql``, with the UDFs registered by
-    the first (re-registering them cost ~150 commands)."""
+    the first (re-registering them made it 95 commands at sf0.001)."""
     from duckdb_behavioral_spark.sources import load_events
     from duckdb_behavioral_spark.sql_surface import behavioral_sql
 

@@ -460,3 +460,49 @@ def test_column_inputs_match_sql_text_inputs(spark, sf):
         assert _duplicated_window_functions(col_form) == []
         assert Counter(map(tuple, col_form.collect())) == Counter(
             map(tuple, text_form.collect()))
+
+
+def test_empty_partition_keys_mean_one_partition(spark, sf):
+    """With no partition keys the SQL text has no PARTITION BY clause:
+    the whole input is one partition, as a constant key makes it."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    import duckdb_behavioral_spark as B
+    from duckdb_behavioral_spark.sources import load_events
+
+    ev = load_events(spark, sf).withColumn("k", F.lit(1))
+    conds = ["event_type = 'view'", "event_type = 'click'", "event_type = 'purchase'"]
+
+    def rows(df):
+        return Counter(map(tuple, df.collect()))
+
+    for ts in ("ts", F.col("ts")):
+        assert rows(ev.select("ts", B.sessionize_col(ts, "30 minutes", []))) == rows(
+            ev.select("ts", B.sessionize_col(ts, "30 minutes", ["k"])))
+    for mode in ("", "strict_increase"):
+        assert rows(B.window_funnel(ev, "1 hour", "ts", conds, [], mode=mode)) == rows(
+            B.window_funnel(ev, "1 hour", "ts", conds, ["k"], mode=mode).drop("k"))
+
+
+def test_condition_bitmask_text_and_column_forms_agree(spark, sf):
+    """SQL-text conditions give a SQL-text mask; Column (or mixed)
+    conditions give a Column mask with the same bits, NULL as false."""
+    from pyspark.sql import functions as F
+
+    from duckdb_behavioral_spark.operators import condition_bitmask
+    from duckdb_behavioral_spark.sources import load_events
+
+    ev = load_events(spark, sf)
+    text = ["event_type = 'view'", "event_type = 'click'", "CAST(NULL AS BOOLEAN)"]
+    cols = [F.expr(c) for c in text]
+    as_text = condition_bitmask(text)
+    assert isinstance(as_text, str)
+    got = ev.select(
+        F.expr(as_text).alias("t"),
+        condition_bitmask(cols).alias("c"),
+        condition_bitmask([text[0], cols[1], text[2]]).alias("x"),
+    ).collect()
+    assert got and all(r.t == r.c == r.x for r in got)
+    assert {r.t for r in got} <= {0, 1, 2}
