@@ -17,8 +17,8 @@ DataFrame construction (important when there are millions of small
 groups) while keeping memory bounded by the largest single *group*,
 not the largest partition — the same bound the reference has for its
 per-group event vectors. Skew guard for the 100 TB posture: a single
-pathological key still concentrates on one task; cap events per key
-upstream (``events_per_key_cap``) if that is a risk.
+pathological key still concentrates on one task; cap its events with
+``max_events_per_group`` if that is a risk.
 """
 
 from __future__ import annotations
@@ -77,7 +77,6 @@ def grouped_scan(
     order: str,
     kernel: Callable[[dict], tuple],
     result_fields: Sequence[T.StructField],
-    num_partitions: int | None = None,
     max_events_per_group: int | None = None,
 ) -> DataFrame:
     """Apply ``kernel`` once per group; returns keys + result columns.
@@ -107,11 +106,7 @@ def grouped_scan(
                          *[f"{e} AS {sqltext.name(n)}" for n, e in zip(payload, exprs)])
     # F.expr, not names: PySpark turns each name into an F.col node
     key_cols = [F.expr(sqltext.name(k)) for k in keys]
-    if num_partitions:
-        rep = proj.repartition(num_partitions, *key_cols)
-    else:
-        rep = proj.repartition(*key_cols)
-    srt = rep.sortWithinPartitions(*key_cols, F.expr(sqltext.name(order)))
+    srt = proj.repartition(*key_cols).sortWithinPartitions(*key_cols, F.expr(sqltext.name(order)))
 
     payload_names = list(payload.keys())
     result_names = [f.name for f in result_fields]

@@ -8,11 +8,12 @@ left-to-right, ``sequence_match_events`` returns the matched ``(?N)``
 step timestamps of the first match (empty array when none —
 reference: src/ffi/sequence_match_events.rs:131-141).
 
-Physical strategies, mirroring (and exceeding) the reference's own
-fast-path classification (reference: src/pattern/executor.rs:60-124):
+Physical strategies, picked from the function and the pattern shape as
+the reference's own fast-path classification does (reference:
+src/pattern/executor.rs:60-124):
 
-- **window strategy** (default for ``sequence_match`` on the common
-  shapes — the scale path, no per-group arrays):
+- **window** (``sequence_match`` on adjacent and wildcard patterns —
+  the scale path, no per-group arrays):
   *wildcard-separated* patterns (``(?1).*(?2)…``) become chained
   reachability flags: ``x_j = cond_j AND any-earlier-row-has(x_{j-1})``
   evaluated as running boolean maxes over one sorted window (a strict
@@ -22,13 +23,18 @@ fast-path classification (reference: src/pattern/executor.rs:60-124):
   condition — IGNORE NULLS skips exactly the events the reference
   drops from the stream, so adjacency is evaluated on the filtered
   subsequence without materializing it.
-- **aggregate-HOF strategy**: the same shapes folded over
-  ``sort_array(collect_list(...))``; used for ``sequence_count`` (the
-  non-overlapping reset is inherently sequential) and available for
-  cross-checking.
-- **kernel strategy**: everything else (time constraints, ``.``) runs
-  the exact Python NFA port (kernels/pattern.py) via the grouped
-  mapInPandas engine.
+- **window_timed** (``sequence_match`` on wildcard chains whose links
+  carry upper time bounds): the same chain as running maxes of
+  timestamps.
+- **hof** (``sequence_count`` on adjacent and wildcard patterns): an
+  ``aggregate`` fold over ``sort_array(collect_list(...))`` — the
+  non-overlapping reset is inherently sequential.
+- **kernel** (everything else: lower time bounds, ``.``, and the
+  reference for the tests): the exact Python NFA port
+  (kernels/pattern.py) via the grouped mapInPandas engine.
+
+``sequence_match_events`` runs wildcard chains as chained per-group
+MIN windows (``window``) and other shapes on the collecting NFA kernel.
 
 Invalid patterns raise ``PatternError`` at plan time by default
 (Spark-idiomatic: the pattern is a query-time constant, so failing
@@ -42,7 +48,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -80,20 +86,36 @@ def _null_result(df, group_by, out, dtype):
     )
 
 
+_STRATEGIES = {
+    "sequence_match": ("window", "window_timed", "kernel"),
+    "sequence_count": ("hof", "kernel"),
+    "sequence_match_events": ("window", "kernel"),
+}
+
+
+def _check_strategy(fn, strategy):
+    """``strategy`` is None (picked from the pattern shape) or one of
+    ``_STRATEGIES[fn]``; tests set it to compare the paths."""
+    if strategy is not None and strategy not in _STRATEGIES[fn]:
+        raise ValueError(
+            f"{fn} strategy must be one of {_STRATEGIES[fn]}, got {strategy!r}")
+
+
 def sequence_match(df, pattern_str, ts, conds, group_by, out="matched",
-                   use_kernel=None, strategy=None, on_invalid="raise"):
+                   strategy=None, on_invalid="raise"):
     return _sequence(df, pattern_str, ts, conds, group_by, out, count_all=False,
-                     use_kernel=use_kernel, strategy=strategy, on_invalid=on_invalid)
+                     strategy=strategy, on_invalid=on_invalid)
 
 
 def sequence_count(df, pattern_str, ts, conds, group_by, out="c",
-                   use_kernel=None, strategy=None, on_invalid="raise"):
+                   strategy=None, on_invalid="raise"):
     return _sequence(df, pattern_str, ts, conds, group_by, out, count_all=True,
-                     use_kernel=use_kernel, strategy=strategy, on_invalid=on_invalid)
+                     strategy=strategy, on_invalid=on_invalid)
 
 
-def _sequence(df, pattern_str, ts, conds, group_by, out, count_all, use_kernel,
-              strategy=None, on_invalid="raise"):
+def _sequence(df, pattern_str, ts, conds, group_by, out, count_all, strategy=None,
+              on_invalid="raise"):
+    _check_strategy("sequence_count" if count_all else "sequence_match", strategy)
     if on_invalid not in ("raise", "null"):
         raise ValueError(f"on_invalid must be 'raise' or 'null', got {on_invalid!r}")
     try:
@@ -106,38 +128,30 @@ def _sequence(df, pattern_str, ts, conds, group_by, out, count_all, use_kernel,
     shape, cidx = P.classify(steps)
     timed = P.classify_timed(steps) if shape == P.SHAPE_COMPLEX else None
     if strategy is None:
-        if use_kernel is True:
-            strategy = "kernel"
-        elif shape == P.SHAPE_COMPLEX:
+        if shape != P.SHAPE_COMPLEX:
+            strategy = "hof" if count_all else "window"
+        elif timed and not count_all:
             # upper-bounded wildcard chains: existence runs JVM-only
-            strategy = "window_timed" if (timed and not count_all) else "kernel"
-        elif use_kernel is False:
-            strategy = "hof"
-        elif not count_all:
-            strategy = "window"  # existence on common shapes: no arrays
+            strategy = "window_timed"
         else:
-            strategy = "hof"  # non-overlapping counting is sequential
+            strategy = "kernel"
     if strategy in ("window", "hof") and shape == P.SHAPE_COMPLEX:
         raise ValueError(f"strategy {strategy!r} requires an adjacent/wildcard pattern")
     if strategy == "window_timed":
-        if count_all or timed is None:
+        if timed is None:
             raise ValueError(
-                "window_timed strategy supports sequence_match on wildcard "
-                "chains with upper-bound time constraints only"
+                "window_timed strategy supports wildcard chains with upper-bound "
+                "time constraints only"
             )
         return _match_window_timed(df, ts, cols, group_by, timed, out)
     if strategy == "window":
-        if count_all:
-            raise ValueError("window strategy supports sequence_match only")
         return _match_window(df, ts, cols, group_by, shape, cidx, out)
     if strategy == "hof":
-        return _hof_path(df, ts, cols, group_by, shape, cidx, count_all, out)
+        return _hof_count(df, ts, cols, group_by, shape, cidx, out)
     return _kernel_path(df, steps, ts, conds, group_by, count_all, out)
 
 
 def _match_window(df, ts, cols, group_by, shape, cidx, out):
-    from pyspark.sql import Window
-
     ts_col = event_time(ts)
     k = len(cidx)
     bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
@@ -187,8 +201,6 @@ def _events_window(ev, ts, cols, group_by, cidx, out):
     chain compares ``struct(t, ordinal)`` lexicographically — equal
     timestamps chain through the ordinal, matching the kernel's
     tie-order-arbitrary row advance."""
-    from pyspark.sql import Window
-
     ts_col = event_time(ts)
     w = Window.partitionBy(*group_by)
     bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
@@ -227,8 +239,6 @@ def _match_window_timed(df, ts, cols, group_by, timed, out):
     monotone in the predecessor timestamp, so the running max is a
     complete reachability summary — one shuffle, no arrays, no Python.
     """
-    from pyspark.sql import Window
-
     cidx, bounds = timed
     ts_col = event_time(ts)
     bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
@@ -258,7 +268,7 @@ def _match_window_timed(df, ts, cols, group_by, timed, out):
 
 
 # ---------------------------------------------------------------------------
-# JVM fast paths
+# Aggregate-HOF count
 # ---------------------------------------------------------------------------
 
 def _event_array(df, ts, cols, group_by):
@@ -277,31 +287,10 @@ def _event_array(df, ts, cols, group_by):
     return ev, F.sort_array(F.collect_list("e"))
 
 
-def _hof_path(df, ts, cols, group_by, shape, cidx, count_all, out):
+def _hof_count(df, ts, cols, group_by, shape, cidx, out):
     ev, arr = _event_array(df, ts, cols, group_by)
-    k = len(cidx)
-    if shape == P.SHAPE_ADJACENT:
-        result = _adjacent_count(arr, cidx, k) if count_all else _adjacent_match(arr, cidx, k)
-    else:
-        result = _wildcard_count(arr, cidx, k) if count_all else _wildcard_match(arr, cidx, k)
-    if not count_all:
-        result = result.cast("boolean").alias(out)
-    else:
-        result = result.cast("long").alias(out)
-    return ev.groupBy(*group_by).agg(result)
-
-
-def _adjacent_match(arr, cidx, k):
-    n = F.size(arr)
-    # exists window of k consecutive events matching cidx[0..k-1]
-    def window_ok(x, i):
-        cond = F.lit(True)
-        for j, c in enumerate(cidx):
-            cond = cond & F.coalesce(F.get(arr, i + j)["b"][c], F.lit(False))
-        return (i <= n - k) & cond
-    return F.exists(arr, lambda x: F.lit(False)) if k == 0 else F.exists(
-        F.transform(arr, window_ok), lambda v: v
-    )
+    count = _adjacent_count if shape == P.SHAPE_ADJACENT else _wildcard_count
+    return ev.groupBy(*group_by).agg(count(arr, cidx, len(cidx)).cast("long").alias(out))
 
 
 def _adjacent_count(arr, cidx, k):
@@ -325,17 +314,6 @@ def _adjacent_count(arr, cidx, k):
         F.filter(idxs, lambda i: i <= n - k), init, merge, lambda acc: acc["cnt"]
     )
     return F.when(n >= k, counted).otherwise(F.lit(0))
-
-
-def _wildcard_match(arr, cidx, k):
-    conds_lit = F.array(*[F.lit(c) for c in cidx])
-    init = F.lit(0).cast("int")
-
-    def merge(acc, e):
-        has = F.coalesce(F.get(e["b"], F.get(conds_lit, acc)), F.lit(False))
-        return F.when((acc < k) & has, acc + 1).otherwise(acc)
-
-    return F.aggregate(arr, init, merge, lambda acc: acc == k)
 
 
 def _wildcard_count(arr, cidx, k):
@@ -371,21 +349,22 @@ def _kernel_path(df, steps, ts, conds, group_by, count_all, out):
     )
     # NULL-ts rows are masked to 0 rather than filtered: a group whose
     # rows all have NULL timestamps must still appear in the output,
-    # matching the window/hof strategies (see _event_array docstring).
+    # matching the JVM strategies (see _event_array docstring).
     df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
     return grouped_scan(df, group_by, masked_payload(t, conds), "t", kernel, [field])
 
 
 def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
-                          use_kernel=False, on_invalid="raise"):
+                          strategy=None, on_invalid="raise"):
     """Matched ``(?N)`` step timestamps of the first match; ``[]`` if none.
 
-    Wildcard chains take a JVM-only path: the lazy NFA's first match
-    is greedy-earliest per step (the earliest feasible anchor never
-    hurts when links are unbounded), which chained per-group MIN
-    windows express with one shuffle and no arrays. Other shapes run
-    the collecting NFA kernel.
+    Wildcard chains take a JVM-only path (``strategy`` 'window'): the
+    lazy NFA's first match is greedy-earliest per step (the earliest
+    feasible anchor never hurts when links are unbounded), which chained
+    per-group MIN windows express with one shuffle and no arrays. Other
+    shapes run the collecting NFA kernel ('kernel').
     """
+    _check_strategy("sequence_match_events", strategy)
     if on_invalid not in ("raise", "null"):
         raise ValueError(f"on_invalid must be 'raise' or 'null', got {on_invalid!r}")
     try:
@@ -397,7 +376,11 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
     group_by = list(group_by)
 
     shape, cidx = P.classify(steps)
-    if shape == P.SHAPE_WILDCARD and not use_kernel:
+    if strategy is None:
+        strategy = "window" if shape == P.SHAPE_WILDCARD else "kernel"
+    if strategy == "window":
+        if shape != P.SHAPE_WILDCARD:
+            raise ValueError("window strategy requires a wildcard pattern")
         return _events_window(df, ts, cols, group_by, cidx, out)
 
     def kernel(arrs):

@@ -47,6 +47,19 @@ def _sorted_pair(ts, mask):
     return [t for t, _ in ev], [m for _, m in ev]
 
 
+def _patterns(execute, pattern, ts, mask, *extra):
+    """``execute(steps, ts, mask, *extra)`` per row: each row's pattern
+    parsed, its events sorted by time and the events matching no
+    condition (mask 0) dropped, as the reference does."""
+    out = []
+    for p, t, m in zip(pattern, ts, mask):
+        tt, mm = _sorted_pair(t, m)
+        nz = [(a, b) for a, b in zip(tt, mm) if b != 0]
+        out.append(execute(KP.parse_pattern(p), [a for a, _ in nz],
+                           [b for _, b in nz], *extra))
+    return out
+
+
 def register(spark: SparkSession) -> None:
     """Register the behavioral SQL functions on this session, unless
     they are registered already: ``behavioral_sql`` calls this before
@@ -68,37 +81,18 @@ def register(spark: SparkSession) -> None:
 
     @F.pandas_udf(T.BooleanType())
     def seq_match(pattern: pd.Series, ts: pd.Series, mask: pd.Series) -> pd.Series:
-        out = []
-        for p, t, m in zip(pattern, ts, mask):
-            steps = KP.parse_pattern(p)
-            tt, mm = _sorted_pair(t, m)
-            nz = [(a, b) for a, b in zip(tt, mm) if b != 0]
-            out.append(bool(KP.execute_pattern(
-                steps, [a for a, _ in nz], [b for _, b in nz], False)))
-        return pd.Series(out)
+        return pd.Series([bool(r) for r in _patterns(
+            KP.execute_pattern, pattern, ts, mask, False)])
 
     @F.pandas_udf(T.LongType())
     def seq_count(pattern: pd.Series, ts: pd.Series, mask: pd.Series) -> pd.Series:
-        out = []
-        for p, t, m in zip(pattern, ts, mask):
-            steps = KP.parse_pattern(p)
-            tt, mm = _sorted_pair(t, m)
-            nz = [(a, b) for a, b in zip(tt, mm) if b != 0]
-            out.append(KP.execute_pattern(
-                steps, [a for a, _ in nz], [b for _, b in nz], True))
-        return pd.Series(out, dtype="int64")
+        return pd.Series(_patterns(KP.execute_pattern, pattern, ts, mask, True),
+                         dtype="int64")
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def seq_match_events(pattern: pd.Series, ts: pd.Series, mask: pd.Series) -> pd.Series:
-        out = []
-        for p, t, m in zip(pattern, ts, mask):
-            steps = KP.parse_pattern(p)
-            tt, mm = _sorted_pair(t, m)
-            nz = [(a, b) for a, b in zip(tt, mm) if b != 0]
-            res = KP.execute_pattern_events(
-                steps, [a for a, _ in nz], [b for _, b in nz])
-            out.append([] if res is None else [int(x) for x in res])
-        return pd.Series(out)
+        return pd.Series([[] if r is None else [int(x) for x in r] for r in _patterns(
+            KP.execute_pattern_events, pattern, ts, mask)])
 
     @F.pandas_udf(T.StringType())
     def seq_next_node(direction: pd.Series, base: pd.Series, ts: pd.Series,

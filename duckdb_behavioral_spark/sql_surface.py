@@ -70,6 +70,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 
 from duckdb_behavioral_spark.intervals import to_micros
+from duckdb_behavioral_spark.operators.grouped import condition_bitmask
 
 _AGG_FNS = (
     "window_funnel",
@@ -381,14 +382,6 @@ def _strlit(arg: str) -> str:
     return m.group(1).replace("''", "'")
 
 
-def _mask(conds) -> str:
-    terms = " + ".join(
-        f"(CASE WHEN coalesce({c}, false) THEN {1 << i} ELSE 0 END)"
-        for i, c in enumerate(conds)
-    )
-    return f"CAST({terms} AS BIGINT)"
-
-
 # --- aggregate rewrites ----------------------------------------------------
 
 
@@ -397,7 +390,7 @@ def _ev_collect(ts: str, conds) -> str:
     # (src/ffi/window_funnel.rs:154-157); collect_list drops the NULLs.
     return (
         f"collect_list(CASE WHEN ({ts}) IS NOT NULL THEN "
-        f"struct(unix_micros({ts}) AS t, {_mask(conds)} AS m) END)"
+        f"struct(unix_micros({ts}) AS t, {condition_bitmask(conds)} AS m) END)"
     )
 
 
@@ -450,7 +443,7 @@ def _expand(fn: str, args) -> str:
         ev = (
             f"collect_list(CASE WHEN ({ts}) IS NOT NULL THEN "
             f"struct(unix_micros({ts}) AS t, CAST({val} AS STRING) AS v, "
-            f"coalesce({bc}, false) AS b, {_mask(conds)} AS m) END)"
+            f"coalesce({bc}, false) AS b, {condition_bitmask(conds)} AS m) END)"
         )
         return (
             f"seq_next_node('{direction}', '{base}', "

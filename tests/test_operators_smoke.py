@@ -91,21 +91,23 @@ class TestWindowFunnel:
             (4, 0, "view"),                                              # entry only
         ]
 
-    @pytest.mark.parametrize("use_kernel", [False, True])
-    def test_default_mode(self, spark, use_kernel):
+    # kernel=False leaves the strategy to the operator (here: window)
+    @pytest.mark.parametrize("kernel", [False, True])
+    def test_default_mode(self, spark, kernel):
         df = make_events(spark, self.rows())
         got = {
             r.user_id: r.step
             for r in B.window_funnel(
-                df, "1 hour", "ts", self.CONDS, ["user_id"], use_kernel=use_kernel
+                df, "1 hour", "ts", self.CONDS, ["user_id"],
+                strategy="kernel" if kernel else None,
             ).collect()
         }
         assert got == {1: 3, 2: 2, 3: 0, 4: 1}
 
-    def test_hof_matches_kernel_on_modes_equivalent_data(self, spark):
+    def test_window_matches_kernel_on_modes_equivalent_data(self, spark):
         df = make_events(spark, self.rows())
-        a = B.window_funnel(df, "1 hour", "ts", self.CONDS, ["user_id"], use_kernel=False)
-        b = B.window_funnel(df, "1 hour", "ts", self.CONDS, ["user_id"], use_kernel=True)
+        a = B.window_funnel(df, "1 hour", "ts", self.CONDS, ["user_id"], strategy="window")
+        b = B.window_funnel(df, "1 hour", "ts", self.CONDS, ["user_id"], strategy="kernel")
         assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
     def test_strict_increase_once(self, spark):
@@ -131,26 +133,30 @@ class TestSequence:
             (4, 0, "view"), (4, 10, "view"), (4, 20, "purchase"),   # v v p → not adjacent v,p? v@10,p@20 adjacent
         ]
 
-    @pytest.mark.parametrize("use_kernel", [False, True])
-    def test_adjacent_match(self, spark, use_kernel):
+    # kernel=False leaves the strategy to the operator (match: window,
+    # count: hof)
+    @pytest.mark.parametrize("kernel", [False, True])
+    def test_adjacent_match(self, spark, kernel):
         df = make_events(spark, self.rows())
         got = {
             r.user_id: r.matched
             for r in B.sequence_match(
-                df, "(?1)(?2)", "ts", self.CONDS, ["user_id"], use_kernel=use_kernel
+                df, "(?1)(?2)", "ts", self.CONDS, ["user_id"],
+                strategy="kernel" if kernel else None,
             ).collect()
         }
         assert got == {1: True, 2: True, 3: False, 4: True}
 
-    @pytest.mark.parametrize("use_kernel", [False, True])
-    def test_wildcard_count(self, spark, use_kernel):
+    @pytest.mark.parametrize("kernel", [False, True])
+    def test_wildcard_count(self, spark, kernel):
         rows = [(1, i * 10, "view" if i % 2 == 0 else "purchase") for i in range(6)]
         rows += [(2, 0, "purchase"), (2, 10, "view")]
         df = make_events(spark, rows)
         got = {
             r.user_id: r.c
             for r in B.sequence_count(
-                df, "(?1).*(?2)", "ts", self.CONDS, ["user_id"], use_kernel=use_kernel
+                df, "(?1).*(?2)", "ts", self.CONDS, ["user_id"],
+                strategy="kernel" if kernel else None,
             ).collect()
         }
         assert got == {1: 3, 2: 0}
@@ -175,6 +181,26 @@ class TestSequence:
             df, "(?1).*(?2)", "ts", self.CONDS, ["user_id"]).collect()}
         assert got[1] == [ts(0), ts(20)]
         assert got[2] == []
+
+
+@pytest.mark.parametrize("fn,strategy", [
+    ("window_funnel", "hof"), ("window_funnel", "bogus"),
+    ("sequence_match", "hof"), ("sequence_match", "bogus"),
+    ("sequence_match_events", "hof"), ("sequence_match_events", "bogus"),
+    ("sequence_count", "window"),
+])
+def test_unknown_strategy_raises(spark, fn, strategy):
+    # an unknown strategy must not fall through to the Python kernel
+    df = make_events(spark, [(1, 0, "view")])
+    conds = ["event_type = 'view'", "event_type = 'purchase'"]
+    if fn == "window_funnel":
+        call = lambda: B.window_funnel(df, "1 hour", "ts", conds, ["user_id"],
+                                       strategy=strategy)
+    else:
+        call = lambda: getattr(B, fn)(df, "(?1).*(?2)", "ts", conds, ["user_id"],
+                                      strategy=strategy)
+    with pytest.raises(ValueError, match=f"{fn} strategy must be one of"):
+        call()
 
 
 class TestSequenceNextNode:

@@ -109,6 +109,11 @@ CONSTRUCTION_JOBS = [
     # the IVF centroid and PQ codebook collects; the projection's
     # barrier sits on the plain embeddings scan and runs none
     ("ann_ivfpq_topk", 2),
+    # operators/rank_select.py's selection (with_global_rank) runs jobs
+    # while the DataFrame is built: AQE plans its lazy checkpoints, 1
+    # for the input barrier and 2 for the range-partitioned one (the
+    # boundary sample and the shuffle). Gated here, not yet cut.
+    ("q17_session_quantiles", 3),
 ]
 
 

@@ -46,25 +46,6 @@ def test_funnel_default_is_windowed_single_shuffle(spark, sf):
     assert "MapInPandas" not in plan
 
 
-def test_funnel_hof_partial_aggregation_before_shuffle(spark, sf):
-    from duckdb_behavioral_spark.sources import load_events
-    import duckdb_behavioral_spark as B
-
-    df = B.window_funnel(
-        load_events(spark, sf), "1 hour", "ts",
-        ["event_type = 'view'", "event_type = 'click'", "event_type = 'purchase'"],
-        ["user_id"], strategy="hof",
-    )
-    plan = plan_of(df)
-    # map-side partial collect_list runs before the only exchange:
-    # only per-group arrays cross the wire, with non-qualifying rows
-    # already nulled out.
-    assert "partial_collect_list" in plan
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "BatchEvalPython" not in plan  # stays JVM-side
-    assert "ArrowEvalPython" not in plan
-
-
 def test_funnel_kernel_single_shuffle(spark, sf):
     from duckdb_behavioral_spark.sources import load_events
     import duckdb_behavioral_spark as B

@@ -1,8 +1,9 @@
 """Property-based tests (hypothesis).
 
 1. The funnel kernel (exact port of the reference greedy scan) agrees
-   with the max-entry dynamic program that the JVM HOF path implements
-   — this is the proof obligation for the ``_funnel_hof`` derivation.
+   with the max-entry dynamic program that the JVM window path
+   implements as chained running maxes — this is the proof obligation
+   for the ``_funnel_window`` derivation.
 2. The pattern fast paths agree with the backtracking NFA on the
    shapes they claim to cover.
 3. Funnel results are invariant to event order before sorting
@@ -25,8 +26,9 @@ SENTINEL = -(2**62)
 
 
 def funnel_dp(ts, mask, window_us, k):
-    """Python mirror of the JVM aggregate-HOF dynamic program:
-    dp[s] = latest entry timestamp of any chain reaching step s+1."""
+    """Python mirror of the dynamic program the JVM window path
+    evaluates as running maxes: dp[s] = latest entry timestamp of any
+    chain reaching step s+1."""
     dp = [SENTINEL] * k
     for t, m in zip(ts, mask):
         new = list(dp)

@@ -2,9 +2,10 @@
 
 The oracle data has mutually exclusive conditions (one event_type per
 row); these tests generate *overlapping* condition masks — the regime
-where HOF-vs-kernel divergence bugs hide (e.g. same-event multi-step
-advance). 200 random groups run through both physical paths in two
-Spark jobs and must agree exactly.
+where JVM-vs-kernel divergence bugs hide (e.g. same-event multi-step
+advance). 200 random groups run through each JVM path and the kernel
+and must agree exactly: the funnel and match ``window`` strategies and
+the count ``hof`` strategy.
 """
 
 import random
@@ -44,11 +45,9 @@ CONDS = ["c0", "c1", "c2", "c3"]
 def test_funnel_strategies_agree(spark, random_events, window):
     kernel = B.window_funnel(random_events, window, "ts", CONDS, ["g"],
                              strategy="kernel")
-    gk = {r.g: r.step for r in kernel.collect()}
-    for strategy in ("hof", "window"):
-        got = B.window_funnel(random_events, window, "ts", CONDS, ["g"],
-                              strategy=strategy)
-        assert {r.g: r.step for r in got.collect()} == gk, strategy
+    got = B.window_funnel(random_events, window, "ts", CONDS, ["g"],
+                          strategy="window")
+    assert {r.g: r.step for r in got.collect()} == {r.g: r.step for r in kernel.collect()}
 
 
 @pytest.mark.parametrize(
@@ -59,11 +58,9 @@ def test_funnel_strategies_agree(spark, random_events, window):
 def test_sequence_strategies_agree(spark, random_events, pattern):
     ref = B.sequence_match(random_events, pattern, "ts", CONDS, ["g"],
                            strategy="kernel")
-    want = sorted(map(tuple, ref.collect()))
-    for strategy in ("hof", "window"):
-        got = B.sequence_match(random_events, pattern, "ts", CONDS, ["g"],
-                               strategy=strategy)
-        assert sorted(map(tuple, got.collect())) == want, strategy
+    got = B.sequence_match(random_events, pattern, "ts", CONDS, ["g"],
+                           strategy="window")
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
     a = B.sequence_count(random_events, pattern, "ts", CONDS, ["g"], strategy="hof")
     b = B.sequence_count(random_events, pattern, "ts", CONDS, ["g"], strategy="kernel")
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))

@@ -78,7 +78,7 @@ def test_all_null_ts_group_present_everywhere(spark):
     df = spark.createDataFrame(NULLS + [(1, T5, True, False), (1, T9, False, True)], SCHEMA)
     conds = ["c0", "c1"]
 
-    for strategy in ("window", "hof", "kernel"):
+    for strategy in ("window", "kernel"):
         got = {r.g: r.matched for r in B.sequence_match(
             df, "(?1).*(?2)", "ts", conds, ["g"], strategy=strategy).collect()}
         assert got == {1: True, 7: False}, strategy
@@ -89,10 +89,10 @@ def test_all_null_ts_group_present_everywhere(spark):
         assert got == {1: 1, 7: 0}, strategy
 
     # events: both the window fast path and the kernel path
-    for use_kernel in (False, True):
+    for strategy in ("window", "kernel"):
         got = {r.g: list(r.m_ts) for r in B.sequence_match_events(
-            df, "(?1).*(?2)", "ts", conds, ["g"], use_kernel=use_kernel).collect()}
-        assert got == {1: [T5, T9], 7: []}, f"use_kernel={use_kernel}"
+            df, "(?1).*(?2)", "ts", conds, ["g"], strategy=strategy).collect()}
+        assert got == {1: [T5, T9], 7: []}, strategy
 
 
 def test_all_null_ts_group_present_kernel_complex_pattern(spark):
