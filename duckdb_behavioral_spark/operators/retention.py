@@ -32,7 +32,9 @@ def retention_col(conds: Sequence) -> Column:
         raise ValueError(f"retention takes 2..32 conditions, got {len(cols)}")
     flags = [F.bool_or(F.coalesce(c, F.lit(False))) for c in cols]
     anchor = flags[0]
-    return F.array(anchor, *[anchor & f for f in flags[1:]])
+    # empty input → [], not [NULL, …] (reference test/sql/retention.test:58-62)
+    return F.when(F.count(F.lit(1)) == 0, F.array().cast("array<boolean>")).otherwise(
+        F.array(anchor, *[anchor & f for f in flags[1:]]))
 
 
 def retention(

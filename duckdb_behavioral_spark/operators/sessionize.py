@@ -14,11 +14,15 @@ shuffles once on the partition keys. NULL timestamps sort first in
 Spark ascending order, so non-null rows only ever see non-null
 predecessors and the running sum is unaffected.
 
-The expression is one SQL string (one py4j call instead of ~30 Column
-nodes), and the boundary test ``coalesce(t - lag(t) > gap, false)``
-reads the ``lag`` once: Catalyst does not merge two equal window
-functions, so a second reference (``lag(t) IS NOT NULL AND …``) would
-compute it twice per row (plan-gated in tests/test_plans.py).
+The expression is one SQL string, written by :func:`session_id_sql`
+for both surfaces: :func:`sessionize_col` wraps it with ``F.expr`` (one
+py4j call instead of ~30 Column nodes), and ``behavioral_sql`` expands
+each ``sessionize(ts, INTERVAL g) OVER (spec)`` call in place with it,
+over the statement's own ``spec``. The boundary test
+``coalesce(t - lag(t) > gap, false)`` reads the ``lag`` once: Catalyst
+does not merge two equal window functions, so a second reference
+(``lag(t) IS NOT NULL AND …``) would compute it twice per row
+(plan-gated in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -31,6 +35,18 @@ from pyspark.sql import functions as F
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark import sqltext
+
+
+def session_id_sql(ts: str, gap_us: int, over: str) -> str:
+    """Session id of each row as SQL text: ``ts`` is the event-time
+    expression, ``gap_us`` the gap in µs and ``over`` the window spec
+    (``[PARTITION BY …] ORDER BY …``) both windows run over."""
+    tsu = sqltext.event_micros(ts)
+    return (
+        f"CASE WHEN {ts} IS NOT NULL THEN sum(CASE WHEN coalesce("
+        f"{tsu} - lag({tsu}) OVER ({over}) > {gap_us}, false) THEN 1 ELSE 0 END) "
+        f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 END"
+    )
 
 
 def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
@@ -46,12 +62,7 @@ def sessionize_col(ts, gap, partition_by: Sequence) -> Column:
     if isinstance(ts, str) and all(isinstance(k, str) for k in partition_by):
         t = sqltext.name(ts)
         over = f"{sqltext.partition_by(partition_by)}ORDER BY {t}"
-        tsu = sqltext.event_micros(t)
-        return F.expr(
-            f"CASE WHEN {t} IS NOT NULL THEN sum(CASE WHEN coalesce("
-            f"{tsu} - lag({tsu}) OVER ({over}) > {gap_us}, false) THEN 1 ELSE 0 END) "
-            f"OVER ({over} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1 END"
-        )
+        return F.expr(session_id_sql(t, gap_us, over))
     ts_col = F.col(ts) if isinstance(ts, str) else ts
     w = Window.partitionBy(*partition_by).orderBy(ts_col.asc())
     tsu = F.unix_micros(event_time(ts_col))

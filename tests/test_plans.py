@@ -32,6 +32,38 @@ def test_sessionize_single_exchange_shared_sort(spark, sf):
     assert m and set(c.split(":")[0] for c in m.group(1).split(",")) == {"ts", "user_id"}
 
 
+# q1 in the reference dialect, plain and beside a JOIN
+Q1_SQL_FORMS = {
+    "sql:q1_sessionize": (
+        "SELECT user_id, ts, sessionize(ts, INTERVAL '30 minutes') "
+        "OVER (PARTITION BY user_id ORDER BY ts) AS session_id FROM events"
+    ),
+    "sql:q1_sessionize_join": (
+        "SELECT e.user_id, e.ts, sessionize(e.ts, INTERVAL '30 minutes') "
+        "OVER (PARTITION BY e.user_id ORDER BY e.ts) AS session_id "
+        "FROM events e JOIN (SELECT DISTINCT user_id FROM events) u "
+        "ON e.user_id = u.user_id"
+    ),
+}
+
+
+def _q1_sql(spark, sf, name):
+    from duckdb_behavioral_spark.sources import load_events
+    from duckdb_behavioral_spark.sql_surface import behavioral_sql
+
+    load_events(spark, sf).createOrReplaceTempView("events")
+    return behavioral_sql(spark, Q1_SQL_FORMS[name])
+
+
+def test_sessionize_sql_single_exchange_shared_sort(spark, sf):
+    """The SQL form of q1 plans as the DataFrame q1 does."""
+    plan = plan_of(_q1_sql(spark, sf, "sql:q1_sessionize"))
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("+- Sort") == 1
+    m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
+    assert m and set(c.split(":")[0] for c in m.group(1).split(",")) == {"ts", "user_id"}
+
+
 def test_funnel_default_is_windowed_single_shuffle(spark, sf):
     from duckdb_behavioral_spark.queries import q3_window_funnel
 
@@ -395,11 +427,12 @@ WINDOWED_QUERIES = [
 ]
 
 
-@pytest.mark.parametrize("name", WINDOWED_QUERIES)
+@pytest.mark.parametrize("name", WINDOWED_QUERIES + list(Q1_SQL_FORMS))
 def test_each_window_function_evaluated_once(spark, sf, name):
     import __spark_entry__ as entry
 
-    dups = _duplicated_window_functions(entry.queries()[name](spark, sf))
+    df = _q1_sql(spark, sf, name) if name in Q1_SQL_FORMS else entry.queries()[name](spark, sf)
+    dups = _duplicated_window_functions(df)
     assert dups == [], f"{name} evaluates these window functions twice: {dups}"
 
 

@@ -2,7 +2,7 @@
 
 - ``simhash64`` against a pure-Python md5 model on hash-random texts
   (bit-63 two's-complement assembly, zero/NULL-token degenerates);
-- the sessionize-JOIN hoist rewrite over a generated grid of SQL
+- ``sessionize … OVER`` beside a JOIN over a generated grid of SQL
   shapes (qualified/unqualified items, struct paths, WHERE, ORDER BY,
   CTE wrapping), each asserted result-identical to the documented CTE
   workaround.
@@ -81,7 +81,7 @@ def test_simhash64_bit63_is_reachable(spark):
     assert v < 0 and v == _py_simhash64(tok)
 
 
-# --- sessionize-JOIN hoist fuzz ----------------------------------------------
+# --- sessionize-JOIN fuzz ----------------------------------------------------
 
 
 @pytest.fixture(scope="module")

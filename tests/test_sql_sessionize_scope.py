@@ -1,9 +1,17 @@
-"""sessionize … OVER rewrite scope (sql_surface._rewrite_sessionize):
-aliased sources, inline subqueries, WHERE pushdown semantics, and the
-explicit JOIN/GROUP BY rejection."""
+"""sessionize … OVER on the SQL surface (sql_surface._rewrite_sessionize).
+
+The call is expanded in place over the statement's own window spec, so
+the window sees the rows SQL gives any window in its scope: after
+FROM, JOIN, WHERE and GROUP BY. Each statement is checked against the
+DataFrame operator or against the same statement with the session ids
+computed in a CTE first; statements SQL itself rejects raise Spark's
+own analysis error."""
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
+
+import duckdb_behavioral_spark as B
 
 from duckdb_behavioral_spark.sql_surface import behavioral_sql
 
@@ -46,8 +54,6 @@ def ev(spark):
     ids=["identifier", "alias", "alias_as", "subquery", "subquery_qualified", "cte"],
 )
 def test_source_shapes_match_operator(spark, ev, sql):
-    import duckdb_behavioral_spark as B
-
     got = {
         (r["user_id"], r["ts"], r["sid"])
         for r in behavioral_sql(spark, sql).collect()
@@ -61,10 +67,8 @@ def test_source_shapes_match_operator(spark, ev, sql):
 
 def test_where_filters_before_window(spark, ev):
     # dropping the 00:10 event must RE-derive gaps on the filtered
-    # stream (00:00 -> 00:20 is 20m: same session) — i.e. the WHERE
-    # moves inside the lag derived table
-    import duckdb_behavioral_spark as B
-
+    # stream (00:00 -> 00:20 is 20m: same session): SQL evaluates the
+    # window after the WHERE
     sql = (
         f"SELECT user_id, ts, {S} AS sid FROM sess_scope_ev "
         "WHERE ts <> TIMESTAMP '2024-01-01 00:10:00'"
@@ -84,8 +88,7 @@ def test_where_filters_before_window(spark, ev):
 
 
 def test_where_with_nested_subquery_passes(spark, ev):
-    # the JOIN detector must not fire on a JOIN inside a nested
-    # subquery of the WHERE condition
+    # a JOIN inside a nested subquery of the WHERE condition
     sql = (
         f"SELECT user_id, ts, {S} AS sid FROM sess_scope_ev WHERE user_id IN "
         "(SELECT a.user_id FROM sess_scope_ev a JOIN sess_scope_ev b "
@@ -94,10 +97,19 @@ def test_where_with_nested_subquery_passes(spark, ev):
     assert len(behavioral_sql(spark, sql).collect()) == 5
 
 
+def _rows(spark, sql):
+    return sorted(map(tuple, behavioral_sql(spark, sql).collect()))
+
+
 def test_group_by_rejected_with_cte_hint(spark, ev):
+    # the window runs over the grouped rows, as after a CTE that groups
     sql = f"SELECT user_id, {S} AS sid FROM sess_scope_ev GROUP BY user_id, ts"
-    with pytest.raises(ValueError, match="CTE"):
-        behavioral_sql(spark, sql)
+    cte_form = (
+        "WITH g AS (SELECT user_id, ts FROM sess_scope_ev GROUP BY user_id, ts) "
+        f"SELECT user_id, {S} AS sid FROM g"
+    )
+    got = _rows(spark, sql)
+    assert got == _rows(spark, cte_form) and len(got) == 5
 
 
 @pytest.fixture()
@@ -108,10 +120,8 @@ def dims(spark):
 
 
 def test_unqualified_join_matches_cte_workaround(spark, ev, dims):
-    # round 5: sessionize … OVER beside a USING join rewrites by
-    # wrapping the WHOLE FROM…JOIN…WHERE segment in the lag derived
-    # table — the window sees the joined+filtered rows, exactly what
-    # the documented CTE workaround produces
+    # the window sees the joined and filtered rows, exactly what the
+    # CTE form produces
     join_form = (
         f"SELECT user_id, ts, tier, {S} AS sid "
         "FROM sess_scope_ev JOIN sess_scope_dim USING (user_id) "
@@ -129,9 +139,7 @@ def test_unqualified_join_matches_cte_workaround(spark, ev, dims):
 
 
 def test_qualified_join_matches_cte_workaround(spark, ev, dims):
-    # round 9: qualified outer references HOIST through the derived
-    # table (a.b projected as `a.b AS __q_a_b` inside, renamed outside)
-    # — the ON-join form must equal the documented CTE workaround
+    # qualified references in the ON-join form equal the CTE form
     join_form = (
         f"SELECT e.user_id, e.ts, d.tier, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id "
@@ -149,14 +157,12 @@ def test_qualified_join_matches_cte_workaround(spark, ev, dims):
 
 
 def test_qualified_self_join_ambiguous_names_hoist(spark, ev):
-    # self-join: BOTH sides expose user_id/ts, so unqualified outer
-    # refs would be ambiguous — the hoist keeps them qualified inside
+    # self-join: BOTH sides expose user_id/ts, so only the qualified
+    # names are unambiguous
     sql = (
         f"SELECT e.user_id, e.ts, {SE} AS sid FROM sess_scope_ev e "
         "JOIN sess_scope_ev x ON e.user_id = x.user_id AND e.ts = x.ts"
     )
-    import duckdb_behavioral_spark as B
-
     got = {tuple(r) for r in behavioral_sql(spark, sql).collect()}
     want = {
         (r["user_id"], r["ts"], r["session_id"])
@@ -166,8 +172,7 @@ def test_qualified_self_join_ambiguous_names_hoist(spark, ev):
 
 
 def test_qualified_select_item_after_call_hoists(spark, ev, dims):
-    # round 6 kept this as a pointed error; round 9: the qualified item
-    # AFTER the call hoists like any other outer reference
+    # a qualified item AFTER the call
     sql = (
         f"SELECT {S} AS sid, d.tier "
         "FROM sess_scope_ev a JOIN sess_scope_dim d USING (user_id)"
@@ -189,9 +194,7 @@ def test_qualified_join_order_by_hoists(spark, ev, dims):
 
 
 def test_qualified_function_call_passes_through(spark, ev, dims):
-    # round 10: a qualified FUNCTION reference resolves from the
-    # catalog, not the FROM scope — it passes through the rewrite
-    # untouched while its qualified ARGUMENT chains hoist normally
+    # a qualified FUNCTION reference resolves from the catalog
     spark.sql(
         "CREATE OR REPLACE FUNCTION sess_scope_plus1(x BIGINT) "
         "RETURNS BIGINT RETURN x + 1"
@@ -209,9 +212,7 @@ def test_qualified_function_call_passes_through(spark, ev, dims):
 
 
 def test_tbl_star_hoists_as_struct(spark, ev, dims):
-    # round 10: `e.*` hoists as struct(e.*) inside the derived table
-    # and expands back via __q_e__star.* — equal to the CTE workaround,
-    # with e's column names preserved
+    # `e.*` equals the CTE form, with e's column names preserved
     star_form = (
         f"SELECT e.*, d.tier, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id "
@@ -231,25 +232,30 @@ def test_tbl_star_hoists_as_struct(spark, ev, dims):
 
 
 def test_multi_level_star_still_directed_to_cte(spark, ev, dims):
+    # `p.props.*` (a struct's fields) beside the call equals the CTE form
     spark.createDataFrame(
         [(u, (f"c{u % 2}",)) for u in range(3)],
         "user_id long, props struct<country:string>",
     ).createOrReplaceTempView("sess_scope_props2")
     sql = (
-        "SELECT e.user_id, p.props.*, "
-        "sessionize(e.ts, INTERVAL '30 minutes') "
-        "OVER (PARTITION BY e.user_id ORDER BY e.ts) AS sid "
+        f"SELECT e.user_id, p.props.*, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_props2 p "
         "ON e.user_id = p.user_id"
     )
-    with pytest.raises(ValueError, match="CTE"):
-        behavioral_sql(spark, sql)
+    cte_form = (
+        "WITH j AS (SELECT e.user_id, e.ts, p.props "
+        "FROM sess_scope_ev e JOIN sess_scope_props2 p "
+        "ON e.user_id = p.user_id) "
+        f"SELECT user_id, props.*, {S} AS sid FROM j"
+    )
+    assert behavioral_sql(spark, sql).columns == ["user_id", "country", "sid"]
+    got = _rows(spark, sql)
+    assert got == _rows(spark, cte_form) and len(got) == 5
 
 
 def test_uncorrelated_outer_subquery_passes_through(spark, ev, dims):
-    # round 11: an UNCORRELATED scalar subquery among the select items
-    # passes through verbatim (it resolves from its own FROM scope) —
-    # equal to the CTE workaround
+    # an UNCORRELATED scalar subquery among the select items equals
+    # the CTE form
     sql = (
         f"SELECT (SELECT max(tier) FROM sess_scope_dim) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
@@ -267,8 +273,7 @@ def test_uncorrelated_outer_subquery_passes_through(spark, ev, dims):
 
 
 def test_uncorrelated_subquery_with_inner_alias_chain(spark, ev, dims):
-    # inner-alias qualified chains (x.tier, where x is bound inside the
-    # subquery) must NOT be hoisted — they reference the subquery scope
+    # x.tier names the subquery's own alias
     sql = (
         f"SELECT (SELECT max(x.tier) FROM sess_scope_dim x) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
@@ -278,10 +283,8 @@ def test_uncorrelated_subquery_with_inner_alias_chain(spark, ev, dims):
 
 
 def test_bare_name_correlated_subquery_flows_through_star(spark, ev, dims):
-    # bare-name correlation survives: user_id flows through the derived
-    # table's SELECT * and still resolves in the subquery (the lookup
-    # table deliberately has no user_id column, so the bare name binds
-    # to the OUTER scope in both the original and rewritten forms)
+    # bare-name correlation: the lookup table has no user_id column,
+    # so the bare name binds to the OUTER scope
     spark.createDataFrame(
         [(1, "g1"), (2, "b2")], "uid long, lt string"
     ).createOrReplaceTempView("sess_scope_lk")
@@ -295,35 +298,34 @@ def test_bare_name_correlated_subquery_flows_through_star(spark, ev, dims):
     assert {(r["user_id"], r["mt"]) for r in rows} == {(1, "g1"), (2, "b2")}
 
 
-def test_outer_alias_correlated_subquery_runs_verbatim(spark, ev, dims):
-    # round 12: e.user_id inside the subquery is an outer-table-alias
-    # correlation. behavioral_sql runs schema-aware: the catalog
-    # proves sess_scope_dim has no column 'e' (no inner shadow), so
-    # the chain hoists into the derived table like any outer chain
-    # and the reference-style correlated report runs verbatim,
-    # matching the documented CTE workaround exactly
-    sql = (
-        "SELECT (SELECT max(x.tier) FROM sess_scope_dim x "
-        f"WHERE x.user_id = e.user_id) AS mt, {SE} AS sid "
-        "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
-    )
-    cte_form = (
+def _correlated_cte_form(inner_source: str) -> str:
+    return (
         "WITH s AS (SELECT e.user_id AS uid, e.ts, "
         "sessionize(e.ts, INTERVAL '30 minutes') OVER "
         "(PARTITION BY e.user_id ORDER BY e.ts) AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d "
         "ON e.user_id = d.user_id) "
-        "SELECT (SELECT max(x.tier) FROM sess_scope_dim x "
+        f"SELECT (SELECT max(x.tier) FROM {inner_source} x "
         "WHERE x.user_id = s.uid) AS mt, sid FROM s"
     )
-    got = sorted(map(tuple, behavioral_sql(spark, sql).collect()))
-    want = sorted(map(tuple, behavioral_sql(spark, cte_form).collect()))
-    assert got == want and len(got) == 5
 
 
-def test_correlated_subquery_without_resolver_keeps_pointed_error(ev, dims):
-    # the pure-string rewrite API has no catalog — the lexical check
-    # cannot prove the chain safe, so the pointed CTE error stays
+def test_outer_alias_correlated_subquery_runs_verbatim(spark, ev, dims):
+    # e.user_id inside the subquery is an outer-table-alias
+    # correlation; the reference-style correlated report equals the
+    # CTE form
+    sql = (
+        "SELECT (SELECT max(x.tier) FROM sess_scope_dim x "
+        f"WHERE x.user_id = e.user_id) AS mt, {SE} AS sid "
+        "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
+    )
+    got = _rows(spark, sql)
+    assert got == _rows(spark, _correlated_cte_form("sess_scope_dim")) and len(got) == 5
+
+
+def test_correlated_subquery_without_resolver_keeps_pointed_error(spark, ev, dims):
+    # the pure-string rewrite needs no catalog: its text, run by
+    # spark.sql, equals the CTE form
     from duckdb_behavioral_spark.sql_surface import rewrite_behavioral_sql
 
     sql = (
@@ -331,14 +333,14 @@ def test_correlated_subquery_without_resolver_keeps_pointed_error(ev, dims):
         f"WHERE x.user_id = e.user_id) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
     )
-    with pytest.raises(ValueError, match="CTE"):
-        rewrite_behavioral_sql(sql)
+    got = sorted(map(tuple, spark.sql(rewrite_behavioral_sql(sql)).collect()))
+    assert got == _rows(spark, _correlated_cte_form("sess_scope_dim")) and len(got) == 5
 
 
 def test_correlated_subquery_shadowed_qualifier_keeps_pointed_error(spark, ev, dims):
     # the subquery's own table carries a column named like the outer
-    # alias — SQL would resolve the qualifier inner-first, so the
-    # hoist cannot prove the outer reading; pointed error
+    # alias: SQL resolves the qualifier inner-first, so `e.user_id`
+    # reads a field of the bigint column `e` and Spark rejects it
     spark.createDataFrame(
         [(1, 7)], "user_id long, e long"
     ).createOrReplaceTempView("sess_scope_shadow")
@@ -347,38 +349,36 @@ def test_correlated_subquery_shadowed_qualifier_keeps_pointed_error(spark, ev, d
         f"WHERE x.user_id = e.user_id) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
     )
-    with pytest.raises(ValueError, match="CTE"):
+    with pytest.raises(AnalysisException, match="INVALID_EXTRACT_BASE_FIELD_TYPE"):
         behavioral_sql(spark, sql)
 
 
 def test_correlated_subquery_over_derived_source_keeps_pointed_error(spark, ev, dims):
-    # a derived table inside the subquery hides its column namespace —
-    # shadowing is unprovable, so the chain keeps the pointed error
+    # a derived table inside the correlated subquery equals the CTE form
     sql = (
         "SELECT (SELECT max(x.tier) FROM "
         "(SELECT * FROM sess_scope_dim) x "
         f"WHERE x.user_id = e.user_id) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
     )
-    with pytest.raises(ValueError, match="CTE"):
-        behavioral_sql(spark, sql)
+    want = _rows(spark, _correlated_cte_form("(SELECT * FROM sess_scope_dim)"))
+    got = _rows(spark, sql)
+    assert got == want and len(got) == 5
 
 
 def test_correlated_subquery_unknown_qualifier_keeps_pointed_error(spark, ev, dims):
-    # a qualifier bound NEITHER in the subquery NOR in the wrapped
-    # segment cannot be anything but a mistake — pointed error
+    # a qualifier bound nowhere is Spark's unresolved column
     sql = (
         "SELECT (SELECT max(x.tier) FROM sess_scope_dim x "
         f"WHERE x.user_id = zz.user_id) AS mt, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_dim d ON e.user_id = d.user_id"
     )
-    with pytest.raises(ValueError, match="CTE"):
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
         behavioral_sql(spark, sql)
 
 
 def test_correlated_subquery_two_outer_chains_hoist(spark, ev, dims):
-    # a subquery correlating with BOTH join sides: each chain hoists
-    # independently; the subquery's inner chains (x.*) stay untouched.
+    # a subquery correlating with BOTH join sides.
     # (Spark supports correlated scalar subqueries only in
     # filters/aggregations/projections, so projection position is the
     # whole addressable surface — an ORDER BY correlation fails in
@@ -416,8 +416,7 @@ def test_subquery_in_order_by_passes_through(spark, ev, dims):
 
 
 def test_struct_field_chain_hoists(spark, ev, dims):
-    # `p.props.country` is lexically identical to an alias.column chain;
-    # the hoist must carry the struct path through the derived table
+    # `p.props.country` is a struct path behind a table alias
     spark.createDataFrame(
         [(u, (f"c{u % 2}",)) for u in range(3)],
         "user_id long, props struct<country:string>",
@@ -436,10 +435,7 @@ def test_struct_field_chain_hoists(spark, ev, dims):
 
 
 def test_qualified_join_inside_cte_body(spark, ev, dims):
-    # round-9 review: the hoist must find the enclosing SELECT at the
-    # call's own paren depth — a sessionize+JOIN inside a CTE body
-    # (unbalanced-paren prefix) regressed to a spurious
-    # 'does not support subqueries' error
+    # a sessionize+JOIN inside a CTE body
     sql = (
         "WITH j AS ("
         f"SELECT user_id, ts, tier, {S} AS sid "
@@ -470,17 +466,64 @@ def test_qualified_join_inside_from_subquery(spark, ev, dims):
 
 
 def test_colliding_hoist_names_directed_to_cte(spark, ev, dims):
-    # e.b_c and e.b.c both mangle to __q_e_b_c — must raise the pointed
-    # error, not an ambiguous-reference analysis failure
+    # `p.b_c` and the struct path `p.b.c` side by side equal the CTE form
     spark.createDataFrame(
         [(u, "x", ("y",)) for u in range(3)],
         "user_id long, b_c string, b struct<c:string>",
     ).createOrReplaceTempView("sess_scope_bc")
     sql = (
-        "SELECT p.b_c, p.b.c, "
-        "sessionize(e.ts, INTERVAL '30 minutes') "
-        "OVER (PARTITION BY e.user_id ORDER BY e.ts) AS sid "
+        f"SELECT p.b_c, p.b.c, {SE} AS sid "
         "FROM sess_scope_ev e JOIN sess_scope_bc p ON e.user_id = p.user_id"
     )
-    with pytest.raises(ValueError, match="same name|CTE"):
-        behavioral_sql(spark, sql)
+    cte_form = (
+        "WITH j AS (SELECT p.b_c, p.b.c, e.user_id, e.ts "
+        "FROM sess_scope_ev e JOIN sess_scope_bc p ON e.user_id = p.user_id) "
+        f"SELECT b_c, c, {S} AS sid FROM j"
+    )
+    assert behavioral_sql(spark, sql).columns == ["b_c", "c", "sid"]
+    got = _rows(spark, sql)
+    assert got == _rows(spark, cte_form) and len(got) == 5
+
+
+def _operator_rows(df, gap="30 minutes", keys=("user_id",)):
+    return {
+        (r["user_id"], r["ts"], r["session_id"])
+        for r in B.sessionize(df, "ts", gap, list(keys)).collect()
+    }
+
+
+def test_parenthesized_window_spec(spark, ev):
+    # the OVER clause ends at its own closing paren, not at the first
+    # ')' inside a parenthesized key or order expression; one partition
+    # for both users, so user 2's 01:00 event splits user 1's sessions
+    ev2 = ev.unionByName(spark.sql(
+        "SELECT 2L AS user_id, TIMESTAMP '2024-01-01 01:00:00' AS ts"))
+    ev2.createOrReplaceTempView("sess_scope_ev2")
+    sql = (
+        "SELECT user_id, ts, sessionize(ts, INTERVAL '30 minutes') "
+        "OVER (PARTITION BY (user_id DIV 10) ORDER BY CAST(ts AS TIMESTAMP)) "
+        "AS sid FROM sess_scope_ev2"
+    )
+    got = {tuple(r) for r in behavioral_sql(spark, sql).collect()}
+    assert got == _operator_rows(ev2.withColumn("k", F.expr("user_id DIV 10")), keys=["k"])
+    assert got != _operator_rows(ev2)
+
+
+def test_two_calls_with_different_gaps_and_specs(spark, ev):
+    sql = (
+        f"SELECT user_id, ts, {S} AS s30, "
+        "sessionize(ts, INTERVAL '5 minutes') OVER (ORDER BY ts) AS s5 "
+        "FROM sess_scope_ev"
+    )
+    rows = behavioral_sql(spark, sql).collect()
+    assert {(r["user_id"], r["ts"], r["s30"]) for r in rows} == _operator_rows(ev)
+    assert {(r["user_id"], r["ts"], r["s5"]) for r in rows} == _operator_rows(
+        ev, "5 minutes", keys=[])
+
+
+def test_timestamp_ntz_column(spark, ev):
+    ntz = ev.selectExpr("user_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts")
+    ntz.createOrReplaceTempView("sess_scope_ntz")
+    sql = f"SELECT user_id, ts, {S} AS sid FROM sess_scope_ntz"
+    got = {tuple(r) for r in behavioral_sql(spark, sql).collect()}
+    assert got == _operator_rows(ntz) and len(got) == 5

@@ -73,3 +73,29 @@ def test_seq_match_and_count_sql(spark, sf_dir, sql_events):
     c = B.sequence_count(ev, "(?1).*(?2)", "ts", conds, ["user_id"], out="c")
     want = m.join(c, "user_id")
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+
+
+def test_retention_empty_input_is_empty_list(spark):
+    # reference test/sql/retention.test:58-62: an empty group gives []
+    from duckdb_behavioral_spark.sql_surface import behavioral_sql
+
+    empty = spark.createDataFrame([], "a boolean, b boolean")
+    empty.createOrReplaceTempView("ret_empty")
+    assert empty.agg(B.retention_col(["a", "b"]).alias("r")).first()["r"] == []
+    assert behavioral_sql(spark, "SELECT retention(a, b) AS r FROM ret_empty").first()["r"] == []
+
+
+@pytest.mark.parametrize("n", [1, 2, 32, 33])
+def test_retention_takes_2_to_32_conditions(spark, n):
+    from duckdb_behavioral_spark.sql_surface import rewrite_behavioral_sql
+
+    conds = ["a"] * n
+    sql = f"SELECT retention({', '.join(conds)}) FROM t"
+    if 2 <= n <= 32:
+        B.retention_col(conds)
+        assert "retention" not in rewrite_behavioral_sql(sql)
+        return
+    with pytest.raises(ValueError, match=r"2\.\.32"):
+        B.retention_col(conds)
+    with pytest.raises(ValueError, match=r"2\.\.32"):
+        rewrite_behavioral_sql(sql)
