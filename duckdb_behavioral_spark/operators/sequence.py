@@ -12,29 +12,35 @@ Physical strategies, picked from the function and the pattern shape as
 the reference's own fast-path classification does (reference:
 src/pattern/executor.rs:60-124):
 
-- **window** (``sequence_match`` on adjacent and wildcard patterns —
+- **window** (``sequence_match`` on adjacent patterns, wildcard
+  patterns and wildcard chains whose links carry upper time bounds —
   the scale path, no per-group arrays):
-  *wildcard-separated* patterns (``(?1).*(?2)…``) become chained
-  reachability flags: ``x_j = cond_j AND any-earlier-row-has(x_{j-1})``
-  evaluated as running boolean maxes over one sorted window (a strict
-  ``(-∞,-1)`` frame encodes "one advance per event").
   *adjacent* patterns (``(?1)(?2)…``) become ``lead(..., j) IGNORE
-  NULLS`` probes over a struct that is NULL for events matching no
-  condition — IGNORE NULLS skips exactly the events the reference
-  drops from the stream, so adjacency is evaluated on the filtered
-  subsequence without materializing it.
-- **window_timed** (``sequence_match`` on wildcard chains whose links
-  carry upper time bounds): the same chain as running maxes of
-  timestamps.
+  NULLS`` probes over a condition bitmask that is NULL for events
+  matching no condition — IGNORE NULLS skips exactly the events the
+  reference drops from the stream, so adjacency is evaluated on the
+  filtered subsequence without materializing it.
+  *wildcard chains* (``(?1).*(?2)…``, optionally ``.*(?t<=N)(?j)``)
+  become one chain of running maxes of timestamps over one sorted
+  window: ``x_j`` is the row's time when condition j matches and the
+  running max of ``x_{j-1}`` over strictly earlier rows (a
+  ``(-∞,-1)`` ROWS frame: one advance per event) exists and, on a
+  bounded link, is within the bound. An upper bound is monotone in the
+  predecessor's time, so the latest predecessor decides reachability.
 - **hof** (``sequence_count`` on adjacent and wildcard patterns): an
-  ``aggregate`` fold over ``sort_array(collect_list(...))`` — the
-  non-overlapping reset is inherently sequential.
+  ``aggregate`` fold over the group's ``sort_array(collect_list(...))``
+  — the non-overlapping reset is inherently sequential.
 - **kernel** (everything else: lower time bounds, ``.``, and the
   reference for the tests): the exact Python NFA port
   (kernels/pattern.py) via the grouped mapInPandas engine.
 
 ``sequence_match_events`` runs wildcard chains as chained per-group
 MIN windows (``window``) and other shapes on the collecting NFA kernel.
+
+Every stage is one SQL string (``duckdb_behavioral_spark.sqltext``):
+conditions and ``ts`` given as Columns are aliased once and named in
+the text, and each window function is its own column, so it is
+evaluated once.
 
 Invalid patterns raise ``PatternError`` at plan time by default
 (Spark-idiomatic: the pattern is a query-time constant, so failing
@@ -46,59 +52,58 @@ pattern errors).
 
 from __future__ import annotations
 
-from typing import Sequence
-
-from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from duckdb_behavioral_spark.functions.timeutil import event_time
 from duckdb_behavioral_spark.kernels import pattern as P
 from duckdb_behavioral_spark import sqltext
-from duckdb_behavioral_spark.operators.grouped import grouped_scan, masked_payload
-
-
-def _as_cols(conds: Sequence) -> list[Column]:
-    return [F.expr(c) if isinstance(c, str) else c for c in conds]
-
-
-def _check(pattern_str: str, conds):
-    cols = _as_cols(conds)
-    if not 2 <= len(cols) <= 32:
-        raise ValueError(f"sequence functions take 2..32 conditions, got {len(cols)}")
-    steps = P.parse_pattern(pattern_str)
-    hi = P.max_condition_index(steps)
-    if hi >= len(cols):
-        # a pattern-content problem (like a parse error), not API misuse
-        raise P.PatternError(
-            f"pattern references condition {hi + 1} but only {len(cols)} conditions given",
-            0,
-        )
-    return steps, cols
+from duckdb_behavioral_spark.operators.grouped import (
+    condition_bitmask,
+    grouped_scan,
+    masked_payload,
+)
 
 
 def _null_result(df, group_by, out, dtype):
     """One row per group with a NULL result — the reference's behavior
     for groups evaluated under an invalid pattern
     (src/ffi/sequence.rs:108-111)."""
-    return df.groupBy(*list(group_by)).agg(
-        F.max(F.lit(None).cast(dtype)).alias(out)
-    )
+    return df.groupBy(*group_by).agg(
+        F.expr(f"max(CAST(NULL AS {dtype})) AS {sqltext.name(out)}"))
 
 
 _STRATEGIES = {
-    "sequence_match": ("window", "window_timed", "kernel"),
+    "sequence_match": ("window", "kernel"),
     "sequence_count": ("hof", "kernel"),
     "sequence_match_events": ("window", "kernel"),
 }
 
 
-def _check_strategy(fn, strategy):
-    """``strategy`` is None (picked from the pattern shape) or one of
-    ``_STRATEGIES[fn]``; tests set it to compare the paths."""
+def _parse(fn, pattern_str, conds, strategy, on_invalid):
+    """The parsed steps; None for an invalid pattern under
+    ``on_invalid='null'``. ``strategy`` is None (picked from the pattern
+    shape) or one of ``_STRATEGIES[fn]``; tests set it to compare the
+    paths."""
     if strategy is not None and strategy not in _STRATEGIES[fn]:
         raise ValueError(
             f"{fn} strategy must be one of {_STRATEGIES[fn]}, got {strategy!r}")
+    if on_invalid not in ("raise", "null"):
+        raise ValueError(f"on_invalid must be 'raise' or 'null', got {on_invalid!r}")
+    if not 2 <= len(conds) <= 32:
+        raise ValueError(f"sequence functions take 2..32 conditions, got {len(conds)}")
+    try:
+        steps = P.parse_pattern(pattern_str)
+        hi = P.max_condition_index(steps)
+        if hi >= len(conds):
+            # a pattern-content problem (like a parse error), not API misuse
+            raise P.PatternError(
+                f"pattern references condition {hi + 1} but only {len(conds)} "
+                "conditions given", 0)
+        return steps
+    except P.PatternError:
+        if on_invalid == "raise":
+            raise
+        return None
 
 
 def sequence_match(df, pattern_str, ts, conds, group_by, out="matched",
@@ -115,81 +120,93 @@ def sequence_count(df, pattern_str, ts, conds, group_by, out="c",
 
 def _sequence(df, pattern_str, ts, conds, group_by, out, count_all, strategy=None,
               on_invalid="raise"):
-    _check_strategy("sequence_count" if count_all else "sequence_match", strategy)
-    if on_invalid not in ("raise", "null"):
-        raise ValueError(f"on_invalid must be 'raise' or 'null', got {on_invalid!r}")
-    try:
-        steps, cols = _check(pattern_str, conds)
-    except P.PatternError:
-        if on_invalid == "raise":
-            raise
-        return _null_result(df, group_by, out, "bigint" if count_all else "boolean")
     group_by = list(group_by)
+    steps = _parse("sequence_count" if count_all else "sequence_match",
+                   pattern_str, conds, strategy, on_invalid)
+    if steps is None:
+        return _null_result(df, group_by, out, "bigint" if count_all else "boolean")
     shape, cidx = P.classify(steps)
-    timed = P.classify_timed(steps) if shape == P.SHAPE_COMPLEX else None
+    bounds = [None] * (len(cidx) - 1) if shape == P.SHAPE_WILDCARD else None
+    if shape == P.SHAPE_COMPLEX and not count_all:
+        # upper-bounded wildcard chains: existence runs JVM-only
+        cidx, bounds = P.classify_timed(steps) or (None, None)
+    jvm = "hof" if count_all else "window"
     if strategy is None:
-        if shape != P.SHAPE_COMPLEX:
-            strategy = "hof" if count_all else "window"
-        elif timed and not count_all:
-            # upper-bounded wildcard chains: existence runs JVM-only
-            strategy = "window_timed"
-        else:
-            strategy = "kernel"
-    if strategy in ("window", "hof") and shape == P.SHAPE_COMPLEX:
-        raise ValueError(f"strategy {strategy!r} requires an adjacent/wildcard pattern")
-    if strategy == "window_timed":
-        if timed is None:
-            raise ValueError(
-                "window_timed strategy supports wildcard chains with upper-bound "
-                "time constraints only"
-            )
-        return _match_window_timed(df, ts, cols, group_by, timed, out)
-    if strategy == "window":
-        return _match_window(df, ts, cols, group_by, shape, cidx, out)
-    if strategy == "hof":
-        return _hof_count(df, ts, cols, group_by, shape, cidx, out)
-    return _kernel_path(df, steps, ts, conds, group_by, count_all, out)
+        strategy = "kernel" if cidx is None else jvm
+    if strategy == jvm and cidx is None:
+        raise ValueError(
+            f"strategy {strategy!r} requires an adjacent or wildcard pattern"
+            + ("" if count_all else " (links may carry upper time bounds)"))
 
-
-def _match_window(df, ts, cols, group_by, shape, cidx, out):
-    ts_col = event_time(ts)
-    k = len(cidx)
-    bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
-    w = Window.partitionBy(*group_by).orderBy(ts_col.asc())
+    df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
+    if strategy == "kernel":
+        return _kernel_path(df, steps, t, conds, group_by, count_all, out)
+    if count_all:
+        return _count_fold(df, t, conds, group_by, shape, cidx, out)
     if shape == P.SHAPE_ADJACENT:
-        # NULL-out events matching no condition; IGNORE-NULLS leads then
-        # step over exactly the filtered subsequence.
-        qual = None
-        for b in bools:
-            qual = b if qual is None else (qual | b)
-        base = df.select(
-            *group_by, ts_col.alias(ts),
-            F.when(qual, F.struct(*[b.alias(f"c{i}") for i, b in enumerate(bools)]))
-            .alias("__qc"),
-        )
-        ok = F.col("__qc").isNotNull() & F.col("__qc")[f"c{cidx[0]}"]
-        for j in range(1, k):
-            nxt = F.expr(f"lead(__qc, {j}) IGNORE NULLS").over(w)
-            ok = ok & F.coalesce(nxt[f"c{cidx[j]}"], F.lit(False))
-        flagged = base.withColumn("__ok", ok)
-    else:
-        # wildcard: chained reachability with a strict (-∞,-1) frame —
-        # each step's event must be strictly after the previous step's.
-        w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
-        cur = df.select(*group_by, ts_col.alias(ts),
-                        *[b.alias(f"__b{i}") for i, b in enumerate(bools)])
-        x = F.col(f"__b{cidx[0]}")
-        cur = cur.withColumn("__x0", x)
-        for j in range(1, k):
-            reach_prev = F.coalesce(F.max(f"__x{j-1}").over(w_prev), F.lit(False))
-            cur = cur.withColumn(f"__x{j}", F.col(f"__b{cidx[j]}") & reach_prev)
-        flagged = cur.withColumn("__ok", F.col(f"__x{k-1}"))
-    return flagged.groupBy(*group_by).agg(
-        F.coalesce(F.bool_or("__ok"), F.lit(False)).alias(out)
+        return _match_adjacent(df, t, conds, group_by, cidx, out)
+    return _match_chain(df, t, conds, group_by, cidx, bounds, out)
+
+
+# ---------------------------------------------------------------------------
+# JVM window paths. ``t`` and ``conds`` are SQL text over ``df``
+# (sqltext.inputs).
+# ---------------------------------------------------------------------------
+
+def _any_row(df, keys, ok, out):
+    """Per group: does any row satisfy ``ok`` (SQL text over ``df``)?"""
+    return df.groupBy(*keys).agg(
+        F.expr(f"coalesce(bool_or({ok}), false) AS {sqltext.name(out)}"))
+
+
+def _match_adjacent(df, t, conds, keys, cidx, out):
+    # The mask is NULL on events matching no condition (and on NULL-ts
+    # rows); IGNORE-NULLS leads then step over exactly the filtered
+    # subsequence.
+    cur = df.selectExpr(
+        *[sqltext.name(g) for g in keys],
+        f"{sqltext.event_micros(t)} AS __t",
+        f"CASE WHEN {t} IS NOT NULL THEN nullif({condition_bitmask(conds)}, 0) END AS __m",
     )
+    order = f"{sqltext.partition_by(keys)}ORDER BY __t"
+    ok = " AND ".join(
+        [f"(__m & {1 << cidx[0]}) != 0"]
+        + [f"(lead(__m, {j}) IGNORE NULLS OVER ({order}) & {1 << c}) != 0"
+           for j, c in enumerate(cidx) if j]
+    )
+    return _any_row(cur.selectExpr(*[sqltext.name(g) for g in keys], f"{ok} AS __ok"),
+                    keys, "__ok", out)
 
 
-def _events_window(ev, ts, cols, group_by, cidx, out):
+def _match_chain(df, t, conds, keys, cidx, bounds, out):
+    """Existence of a wildcard chain ``(?c0).*(?c1)…``; ``bounds[j-1]``
+    is the largest allowed µs gap into step j, None where the link is
+    unbounded (``P.classify_timed``).
+
+    ``x_j`` is this row's µs time when condition ``cidx[j]`` matches and
+    the running max ``__p{j}`` of ``x_{j-1}`` over strictly earlier rows
+    exists (and is within the link's bound). Each running max is its
+    own column, so its window is evaluated once even when the bound
+    tests it."""
+    tsu = sqltext.event_micros(t)
+    cur = df.selectExpr(
+        *[sqltext.name(g) for g in keys],
+        f"{tsu} AS __t",
+        *[f"coalesce({conds[i]}, false) AS __c{i}" for i in sorted(set(cidx[1:]))],
+        f"CASE WHEN {conds[cidx[0]]} THEN {tsu} END AS __x0",
+    )
+    order = (f"{sqltext.partition_by(keys)}ORDER BY __t "
+             "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")
+    x = "__x0"
+    for j in range(1, len(cidx)):
+        cur = cur.selectExpr("*", f"max({x}) OVER ({order}) AS __p{j}")
+        link = (f"__p{j} IS NOT NULL" if bounds[j - 1] is None
+                else f"__p{j} >= __t - {bounds[j - 1]}")
+        x = f"CASE WHEN __c{cidx[j]} AND {link} THEN __t END"
+    return _any_row(cur, keys, f"{x} IS NOT NULL", out)
+
+
+def _events_window(df, t, conds, keys, cidx, out):
     """First-match step timestamps for wildcard chains: m_0 = earliest
     c_0 event; m_j = earliest c_j event strictly after m_{j-1}. All
     chained full-partition MIN windows (no orderBy, no sort).
@@ -200,142 +217,70 @@ def _events_window(ev, ts, cols, group_by, cidx, out):
     carries a unique ordinal (``monotonically_increasing_id``) and the
     chain compares ``struct(t, ordinal)`` lexicographically — equal
     timestamps chain through the ordinal, matching the kernel's
-    tie-order-arbitrary row advance."""
-    ts_col = event_time(ts)
-    w = Window.partitionBy(*group_by)
-    bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
-    cur = ev.select(
-        *group_by, F.unix_micros(ts_col).alias("__tu"),
-        F.monotonically_increasing_id().alias("__mid"),
-        *[b.alias(f"__b{i}") for i, b in enumerate(bools)],
+    tie-order-arbitrary row advance. m_j is NULL when m_{j-1} is, so
+    the match is complete when the last one is set."""
+    cur = df.selectExpr(
+        *[sqltext.name(g) for g in keys],
+        f"struct({sqltext.event_micros(t)} AS t, monotonically_increasing_id() AS i) AS __k",
+        *[f"coalesce({conds[i]}, false) AND {t} IS NOT NULL AS __c{i}"
+          for i in sorted(set(cidx))],
     )
-    key = F.struct(F.col("__tu").alias("t"), F.col("__mid").alias("i"))
-    for j, ci in enumerate(cidx):
-        cond = F.col(f"__b{ci}")
-        if j > 0:
-            cond = cond & (key > F.col(f"__m{j-1}"))
-        cur = cur.withColumn(f"__m{j}", F.min(F.when(cond, key)).over(w))
+    over = f"OVER ({sqltext.partition_by(keys).rstrip()})"
+    for j, c in enumerate(cidx):
+        after = f" AND __k > __m{j - 1}" if j else ""
+        cur = cur.selectExpr("*", f"min(CASE WHEN __c{c}{after} THEN __k END) {over} AS __m{j}")
     k = len(cidx)
-    agg = cur.groupBy(*group_by).agg(
-        *[F.min(f"__m{j}").alias(f"__m{j}") for j in range(k)]
-    )
-    complete = F.col("__m0").isNotNull()
-    for j in range(1, k):
-        complete = complete & F.col(f"__m{j}").isNotNull()
-    arr = F.when(
-        complete,
-        F.array(*[F.timestamp_micros(F.col(f"__m{j}")["t"]) for j in range(k)]),
-    ).otherwise(F.array().cast("array<timestamp>"))
-    return agg.select(*group_by, arr.alias(out))
-
-
-def _match_window_timed(df, ts, cols, group_by, timed, out):
-    """Existence of a wildcard chain with per-link upper time bounds,
-    as chained running-max windows carrying timestamps.
-
-    ``x_j`` = this row's µs timestamp when condition j matches AND the
-    running max of ``x_{j-1}`` over strictly-earlier rows satisfies the
-    link bound (``prev >= cur - bound``). Upper-bounded links are
-    monotone in the predecessor timestamp, so the running max is a
-    complete reachability summary — one shuffle, no arrays, no Python.
-    """
-    cidx, bounds = timed
-    ts_col = event_time(ts)
-    bools = [F.coalesce(c, F.lit(False)) & ts_col.isNotNull() for c in cols]
-    w_prev = (
-        Window.partitionBy(*group_by)
-        .orderBy(ts_col.asc())
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    cur = df.select(
-        *group_by, ts_col.alias(ts), F.unix_micros(ts_col).alias("__tu"),
-        *[b.alias(f"__b{i}") for i, b in enumerate(bools)],
-    )
-    cur = cur.withColumn("__x0", F.when(F.col(f"__b{cidx[0]}"), F.col("__tu")))
-    for j in range(1, len(cidx)):
-        # the running max is its own column, so its window is evaluated
-        # once even when the link bound tests it a second time
-        cur = cur.withColumn(f"__p{j}", F.max(f"__x{j-1}").over(w_prev))
-        prev = F.col(f"__p{j}")
-        ok = F.col(f"__b{cidx[j]}") & prev.isNotNull()
-        if bounds[j - 1] is not None:
-            ok = ok & (prev >= F.col("__tu") - F.lit(bounds[j - 1]))
-        cur = cur.withColumn(f"__x{j}", F.when(ok, F.col("__tu")))
-    flagged = cur.withColumn("__ok", F.col(f"__x{len(cidx)-1}").isNotNull())
-    return flagged.groupBy(*group_by).agg(
-        F.coalesce(F.bool_or("__ok"), F.lit(False)).alias(out)
-    )
+    steps = ", ".join(f"timestamp_micros(min(__m{j}).t)" for j in range(k))
+    return cur.groupBy(*keys).agg(F.expr(
+        f"CASE WHEN min(__m{k - 1}) IS NULL THEN CAST(array() AS ARRAY<TIMESTAMP>) "
+        f"ELSE array({steps}) END AS {sqltext.name(out)}"))
 
 
 # ---------------------------------------------------------------------------
 # Aggregate-HOF count
 # ---------------------------------------------------------------------------
 
-def _event_array(df, ts, cols, group_by):
-    """Per-group sorted array of struct(t, b) with all-false events dropped.
-
-    NULLing non-qualifying rows (instead of filtering) keeps every
-    group present in the output even when its array is empty.
-    """
-    ts_col = event_time(ts)
-    bools = F.array(*[F.coalesce(c, F.lit(False)) for c in cols])
-    keep = ts_col.isNotNull() & F.exists(bools, lambda b: b)
-    ev = df.select(
-        *group_by,
-        F.when(keep, F.struct(F.unix_micros(ts_col).alias("t"), bools.alias("b"))).alias("e"),
+def _count_fold(df, t, conds, keys, shape, cidx, out):
+    """Fold over each group's sorted array ``__e`` of struct(t, b), where
+    ``b`` holds the event's condition flags; events matching no
+    condition (and NULL-ts rows) are NULLed, not filtered, so every
+    group stays present in the output even when its array is empty."""
+    flags = f"array({', '.join(f'coalesce({c}, false)' for c in conds)})"
+    ev = df.selectExpr(
+        *[sqltext.name(g) for g in keys],
+        f"CASE WHEN {t} IS NOT NULL AND array_contains({flags}, true) "
+        f"THEN struct({sqltext.event_micros(t)} AS t, {flags} AS b) END AS e",
     )
-    return ev, F.sort_array(F.collect_list("e"))
-
-
-def _hof_count(df, ts, cols, group_by, shape, cidx, out):
-    ev, arr = _event_array(df, ts, cols, group_by)
-    count = _adjacent_count if shape == P.SHAPE_ADJACENT else _wildcard_count
-    return ev.groupBy(*group_by).agg(count(arr, cidx, len(cidx)).cast("long").alias(out))
-
-
-def _adjacent_count(arr, cidx, k):
-    # Non-overlapping left-to-right: on a match at i, skip to i+k
-    # (reference: src/pattern/executor.rs:126-166).
-    n = F.size(arr)
-    init = F.struct(F.lit(0).cast("int").alias("next"), F.lit(0).cast("long").alias("cnt"))
-
-    def merge(acc, iv):
-        i = iv
-        cond = i >= acc["next"]
-        for j, c in enumerate(cidx):
-            cond = cond & F.coalesce(F.get(arr, i + j)["b"][c], F.lit(False))
-        return F.struct(
-            F.when(cond, i + k).otherwise(acc["next"]).alias("next"),
-            F.when(cond, acc["cnt"] + 1).otherwise(acc["cnt"]).alias("cnt"),
+    arr = ev.groupBy(*keys).agg(F.expr("sort_array(collect_list(e)) AS __e"))
+    k = len(cidx)
+    if shape == P.SHAPE_ADJACENT:
+        # Non-overlapping left-to-right: on a match at i, resume at i+k
+        # (reference: src/pattern/executor.rs:126-166).
+        hit = " AND ".join(f"coalesce(get(__e, i + {j}).b[{c}], false)"
+                           for j, c in enumerate(cidx))
+        count = (
+            f"CASE WHEN size(__e) >= {k} THEN aggregate(sequence(0, size(__e) - {k}), "
+            f"named_struct('next', 0, 'cnt', 0L), (acc, i) -> IF(i >= acc.next AND {hit}, "
+            f"named_struct('next', i + {k}, 'cnt', acc.cnt + 1), acc), acc -> acc.cnt) "
+            f"ELSE 0 END"
         )
-
-    idxs = F.transform(arr, lambda x, i: i)
-    counted = F.aggregate(
-        F.filter(idxs, lambda i: i <= n - k), init, merge, lambda acc: acc["cnt"]
-    )
-    return F.when(n >= k, counted).otherwise(F.lit(0))
-
-
-def _wildcard_count(arr, cidx, k):
-    conds_lit = F.array(*[F.lit(c) for c in cidx])
-    init = F.struct(F.lit(0).cast("int").alias("step"), F.lit(0).cast("long").alias("cnt"))
-
-    def merge(acc, e):
-        has = F.coalesce(F.get(e["b"], F.get(conds_lit, acc["step"])), F.lit(False))
-        ns = F.when(has, acc["step"] + 1).otherwise(acc["step"])
-        return F.struct(
-            F.when(ns >= k, 0).otherwise(ns).alias("step"),
-            F.when(ns >= k, acc["cnt"] + 1).otherwise(acc["cnt"]).alias("cnt"),
+    else:
+        # n counts the steps advanced: step n % k is awaited next, and
+        # n DIV k chains have completed (the state resets after each).
+        want = f"array({', '.join(map(str, cidx))})"
+        count = (
+            f"aggregate(__e, 0L, (n, e) -> n + IF(coalesce(get(e.b, "
+            f"get({want}, CAST(n % {k} AS INT))), false), 1, 0), n -> n DIV {k})"
         )
-
-    return F.aggregate(arr, init, merge, lambda acc: acc["cnt"])
+    return arr.selectExpr(*[sqltext.name(g) for g in keys],
+                          f"CAST({count} AS BIGINT) AS {sqltext.name(out)}")
 
 
 # ---------------------------------------------------------------------------
 # Python NFA path
 # ---------------------------------------------------------------------------
 
-def _kernel_path(df, steps, ts, conds, group_by, count_all, out):
+def _kernel_path(df, steps, t, conds, group_by, count_all, out):
     def kernel(arrs):
         m = arrs["m"]
         nz = m != 0
@@ -349,8 +294,7 @@ def _kernel_path(df, steps, ts, conds, group_by, count_all, out):
     )
     # NULL-ts rows are masked to 0 rather than filtered: a group whose
     # rows all have NULL timestamps must still appear in the output,
-    # matching the JVM strategies (see _event_array docstring).
-    df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
+    # matching the JVM strategies (see _count_fold).
     return grouped_scan(df, group_by, masked_payload(t, conds), "t", kernel, [field])
 
 
@@ -364,24 +308,19 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
     per-group MIN windows express with one shuffle and no arrays. Other
     shapes run the collecting NFA kernel ('kernel').
     """
-    _check_strategy("sequence_match_events", strategy)
-    if on_invalid not in ("raise", "null"):
-        raise ValueError(f"on_invalid must be 'raise' or 'null', got {on_invalid!r}")
-    try:
-        steps, cols = _check(pattern_str, conds)
-    except P.PatternError:
-        if on_invalid == "raise":
-            raise
-        return _null_result(df, group_by, out, "array<timestamp>")
     group_by = list(group_by)
-
+    steps = _parse("sequence_match_events", pattern_str, conds, strategy, on_invalid)
+    if steps is None:
+        return _null_result(df, group_by, out, "array<timestamp>")
     shape, cidx = P.classify(steps)
     if strategy is None:
         strategy = "window" if shape == P.SHAPE_WILDCARD else "kernel"
+    if strategy == "window" and shape != P.SHAPE_WILDCARD:
+        raise ValueError("window strategy requires a wildcard pattern")
+
+    df, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
     if strategy == "window":
-        if shape != P.SHAPE_WILDCARD:
-            raise ValueError("window strategy requires a wildcard pattern")
-        return _events_window(df, ts, cols, group_by, cidx, out)
+        return _events_window(df, t, conds, group_by, cidx, out)
 
     def kernel(arrs):
         m = arrs["m"]
@@ -391,9 +330,8 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
 
     # NULL-ts rows are masked to 0 (dropped inside the kernel) rather
     # than filtered, so all-NULL groups still emit an empty array.
-    ev, (t, *conds) = sqltext.inputs(df, [sqltext.column(ts), *conds])
     got = grouped_scan(
-        ev,
+        df,
         group_by,
         masked_payload(t, conds),
         "t",
@@ -401,6 +339,6 @@ def sequence_match_events(df, pattern_str, ts, conds, group_by, out="m_ts",
         [T.StructField("__us", T.ArrayType(T.LongType(), False), False)],
     )
     # µs → timestamp conversion stays JVM-side.
-    return got.select(
-        *group_by, F.transform("__us", lambda x: F.timestamp_micros(x)).alias(out)
-    )
+    return got.selectExpr(
+        *[sqltext.name(g) for g in group_by],
+        f"transform(__us, x -> timestamp_micros(x)) AS {sqltext.name(out)}")

@@ -3,20 +3,25 @@
 The reference registers its seven functions as SQL aggregates in the
 host engine (reference: src/ffi/mod.rs:64-84). PySpark cannot register
 true Python UDAFs, so the SQL surface follows Spark's idiom for
-custom per-group logic: the grouping/sorting stays in SQL
-(``sort_array(collect_list(struct(...)))``) and the registered scalar
-functions evaluate the per-group kernel over the collected arrays —
+custom per-group logic: the grouping stays in SQL
+(``collect_list(struct(...))``) and the registered scalar functions
+evaluate the per-group kernel over the collected arrays —
 Arrow-batched, one row per group.
 
-Example (after ``register(spark)``), equivalent to oracle Q3:
+Example (after ``register(spark)``), equivalent to oracle Q3 and to
+what ``sql_surface.behavioral_sql`` makes of
+``window_funnel(INTERVAL '1 hour', ts, …)`` (it inlines the
+``collect_list`` in both ``transform`` calls; Catalyst computes it
+once):
 
     WITH g AS (
       SELECT user_id,
-             sort_array(collect_list(struct(unix_micros(ts) AS t,
-               CAST(CASE WHEN event_type = 'view' THEN 1
-                         WHEN event_type = 'click' THEN 2
-                         WHEN event_type = 'purchase' THEN 4
-                         ELSE 0 END AS BIGINT) AS m))) AS ev
+             collect_list(CASE WHEN ts IS NOT NULL THEN
+               struct(unix_micros(CAST(ts AS TIMESTAMP)) AS t,
+                      CAST(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END
+                         | CASE WHEN event_type = 'click' THEN 2 ELSE 0 END
+                         | CASE WHEN event_type = 'purchase' THEN 4 ELSE 0 END
+                           AS BIGINT) AS m) END) AS ev
       FROM events GROUP BY user_id)
     SELECT user_id,
            wf_step(3600000000, '', transform(ev, x -> x.t),
@@ -24,7 +29,11 @@ Example (after ``register(spark)``), equivalent to oracle Q3:
     FROM g
 
 Collect ts+mask as ONE struct array (then split with ``transform``) so
-the positional pairing is guaranteed; the UDFs re-sort defensively.
+the positional pairing is guaranteed; the UDFs sort each row's events
+by time themselves, so no ``sort_array`` is needed. The cast reads a
+TIMESTAMP_NTZ column as TIMESTAMP (``sqltext.event_micros``), and
+``collect_list`` drops the NULLs of NULL-ts rows.
+
 A DataFrame-first user should prefer the operators in
 ``duckdb_behavioral_spark.operators`` — they pick JVM fast paths where
 possible; the SQL UDFs always run the Python kernels.

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from duckdb_behavioral_spark.intervals import to_micros
 from duckdb_behavioral_spark.operators.grouped import condition_bitmask
 from duckdb_behavioral_spark.operators.sessionize import session_id_sql
+from duckdb_behavioral_spark.sqltext import event_micros
 
 _AGG_FNS = (
     "window_funnel",
@@ -368,7 +369,7 @@ def _ev_collect(ts: str, conds) -> str:
     # (src/ffi/window_funnel.rs:154-157); collect_list drops the NULLs.
     return (
         f"collect_list(CASE WHEN ({ts}) IS NOT NULL THEN "
-        f"struct(unix_micros({ts}) AS t, {condition_bitmask(conds)} AS m) END)"
+        f"struct({event_micros(ts)} AS t, {condition_bitmask(conds)} AS m) END)"
     )
 
 
@@ -420,7 +421,7 @@ def _expand(fn: str, args) -> str:
         conds = args[5:]
         ev = (
             f"collect_list(CASE WHEN ({ts}) IS NOT NULL THEN "
-            f"struct(unix_micros({ts}) AS t, CAST({val} AS STRING) AS v, "
+            f"struct({event_micros(ts)} AS t, CAST({val} AS STRING) AS v, "
             f"coalesce({bc}, false) AS b, {condition_bitmask(conds)} AS m) END)"
         )
         return (
@@ -447,6 +448,8 @@ def _rewrite_calls(sql: str, fn: str) -> str:
 # --- sessionize (window form, in place) ------------------------------------
 
 _OVER_RE = re.compile(r"\s*OVER\s*\(", re.IGNORECASE)
+_FRAME_RE = re.compile(
+    r"\b(ROWS|RANGE|GROUPS)\s+(BETWEEN|UNBOUNDED|CURRENT|[0-9]|INTERVAL)\b", re.IGNORECASE)
 
 
 def _rewrite_sessionize(sql: str) -> str:
@@ -469,6 +472,12 @@ def _rewrite_sessionize(sql: str) -> str:
             raise ValueError("sessionize requires OVER ([PARTITION BY …] ORDER BY …)")
         close = _match_paren(sql, mo.end() - 1)
         spec = sql[mo.end() : close].strip()
+        frame = _FRAME_RE.search(spec)
+        if frame:
+            # the expansion sets its own frame, and its lag takes none
+            raise ValueError(
+                f"sessionize … OVER takes no window frame, got {frame.group(1).upper()} "
+                f"in OVER ({spec}); give only [PARTITION BY …] ORDER BY …")
         repl = session_id_sql(f"({args[0]})", _interval_us(args[1]), spec)
         sql = sql[:lo] + repl + sql[close + 1 :]
         pos = lo + len(repl)

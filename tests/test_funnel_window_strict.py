@@ -5,6 +5,7 @@ timestamps where a ROWS frame would wrongly allow same-ts chaining."""
 import random
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from duckdb_behavioral_spark.kernels.funnel import funnel_max_step, parse_modes
@@ -67,8 +68,9 @@ def test_same_ts_events_cannot_chain_under_strict_increase(spark):
 
 
 class TestTimedSequenceWindow:
-    """window_timed sequence strategy: JVM running-max DP must equal
-    the NFA for wildcard chains with upper-bound time constraints."""
+    """sequence_match's window strategy on wildcard chains: its
+    running-max chain must equal the NFA with and without upper-bound
+    time constraints on the links."""
 
     def test_randomized_equals_nfa(self, spark):
         import random
@@ -79,7 +81,8 @@ class TestTimedSequenceWindow:
         from duckdb_behavioral_spark.operators.sequence import sequence_match
 
         rng = random.Random(4242)
-        for pat, k in [("(?1).*(?t<=5)(?2)", 2), ("(?1).*(?2).*(?t<2)(?3)", 3)]:
+        for pat, k in [("(?1).*(?t<=5)(?2)", 2), ("(?1).*(?2).*(?t<2)(?3)", 3),
+                       ("(?1).*(?2).*(?3)", 3)]:
             steps = parse_pattern(pat)
             rows, expect = [], {}
             for g in range(120):
@@ -102,7 +105,7 @@ class TestTimedSequenceWindow:
 
     def test_dispatch_and_rejections(self, spark):
         from duckdb_behavioral_spark.kernels.pattern import classify_timed, parse_pattern
-        from duckdb_behavioral_spark.operators.sequence import sequence_count
+        from duckdb_behavioral_spark.operators.sequence import sequence_match
 
         assert classify_timed(parse_pattern("(?1).*(?t<=3600)(?2)")) == (
             [0, 1], [3_600_999_999])
@@ -112,12 +115,26 @@ class TestTimedSequenceWindow:
         assert classify_timed(parse_pattern("(?1)(?t<=10)(?2)")) is None
         assert classify_timed(parse_pattern("(?1).*(?t>=10)(?2)")) is None
 
-        df = spark.createDataFrame([(1, T0, 3)], "g long, ts timestamp, m long")
-        import pytest as _pytest
-        with _pytest.raises(ValueError, match="window_timed"):
-            sequence_count(df, "(?1).*(?t<=5)(?2)", "ts",
-                           ["(m & 1) != 0", "(m & 2) != 0"], ["g"],
-                           strategy="window_timed")
+        # strategy="window" runs the timed chain, equal to the kernel
+        df = spark.createDataFrame(
+            [(g, T0 + timedelta(seconds=s), m) for g, s, m in [
+                (1, 0, 1), (1, 4, 2), (2, 0, 1), (2, 7, 2), (3, 0, 2), (3, 3, 1),
+                (4, 0, 1), (4, 6, 1), (4, 9, 2)]],
+            "g long, ts timestamp, m long",
+        )
+        conds = ["(m & 1) != 0", "(m & 2) != 0"]
+
+        def run(pattern, strategy):
+            return sorted(map(tuple, sequence_match(
+                df, pattern, "ts", conds, ["g"], strategy=strategy).collect()))
+
+        pat = "(?1).*(?t<=5)(?2)"
+        assert run(pat, "window") == run(pat, "kernel") == [
+            (1, True), (2, False), (3, False), (4, True)]
+        # a lower bound is not monotone in the predecessor's time: the
+        # window strategy refuses it rather than answer wrongly
+        with pytest.raises(ValueError, match="strategy 'window' requires"):
+            run("(?1).*(?t>=5)(?2)", "window")
 
     def test_q6_shape_runs_jvm_only(self, spark):
         from duckdb_behavioral_spark.operators.sequence import sequence_match

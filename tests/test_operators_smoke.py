@@ -185,7 +185,8 @@ class TestSequence:
 
 @pytest.mark.parametrize("fn,strategy", [
     ("window_funnel", "hof"), ("window_funnel", "bogus"),
-    ("sequence_match", "hof"), ("sequence_match", "bogus"),
+    ("sequence_match", "hof"), ("sequence_match", "window_timed"),
+    ("sequence_match", "bogus"),
     ("sequence_match_events", "hof"), ("sequence_match_events", "bogus"),
     ("sequence_count", "window"),
 ])

@@ -147,6 +147,11 @@ PY4J_COMMANDS = [
     ("q3_window_funnel", 87),  # (710)
     ("q9_next_node_forward", 113),  # (401)
     ("q16_funnel_allow_reentry", 107),  # (430)
+    ("q5_sequence_match_adjacent", 78),  # (401)
+    ("q6_sequence_match_time", 79),  # (463)
+    ("q7_sequence_count", 77),  # (577)
+    # above q5-q7 by the Column select in queries.py that unpacks its array
+    ("q8_sequence_match_events", 137),  # (647)
 ]
 
 

@@ -436,12 +436,18 @@ def test_each_window_function_evaluated_once(spark, sf, name):
     assert dups == [], f"{name} evaluates these window functions twice: {dups}"
 
 
+def _rows(df):
+    """The rows of ``df`` as a multiset; arrays become tuples."""
+    from collections import Counter
+
+    return Counter(tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                   for r in df.collect())
+
+
 def test_column_inputs_match_sql_text_inputs(spark, sf):
     """The operators build SQL text; a Column input (ts, condition,
     value) is aliased once and named in the text, so it gives the same
     rows as its SQL-text form and still evaluates each window once."""
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
     import duckdb_behavioral_spark as B
@@ -469,18 +475,20 @@ def test_column_inputs_match_sql_text_inputs(spark, sf):
                                               mode="allow_reentry")),
         forms(lambda t, c, v: B.sequence_next_node(
             ev, "forward", "first_match", t, v, c[0], c[:2], ["user_id"])),
+        *[forms(lambda t, c, v, p=p: B.sequence_match(ev, p, t, c, ["user_id"]))
+          for p in ("(?1)(?3)", "(?1).*(?2).*(?3)", "(?1).*(?t<=3600)(?3)")],
+        *[forms(lambda t, c, v, p=p: B.sequence_count(ev, p, t, c, ["user_id"]))
+          for p in ("(?1)(?3)", "(?1).*(?3)")],
+        forms(lambda t, c, v: B.sequence_match_events(ev, "(?1).*(?3)", t, c, ["user_id"])),
     ]
     for text_form, col_form in cases:
         assert _duplicated_window_functions(col_form) == []
-        assert Counter(map(tuple, col_form.collect())) == Counter(
-            map(tuple, text_form.collect()))
+        assert _rows(col_form) == _rows(text_form)
 
 
 def test_empty_partition_keys_mean_one_partition(spark, sf):
     """With no partition keys the SQL text has no PARTITION BY clause:
     the whole input is one partition, as a constant key makes it."""
-    from collections import Counter
-
     from pyspark.sql import functions as F
 
     import duckdb_behavioral_spark as B
@@ -489,15 +497,19 @@ def test_empty_partition_keys_mean_one_partition(spark, sf):
     ev = load_events(spark, sf).withColumn("k", F.lit(1))
     conds = ["event_type = 'view'", "event_type = 'click'", "event_type = 'purchase'"]
 
-    def rows(df):
-        return Counter(map(tuple, df.collect()))
-
     for ts in ("ts", F.col("ts")):
-        assert rows(ev.select("ts", B.sessionize_col(ts, "30 minutes", []))) == rows(
+        assert _rows(ev.select("ts", B.sessionize_col(ts, "30 minutes", []))) == _rows(
             ev.select("ts", B.sessionize_col(ts, "30 minutes", ["k"])))
     for mode in ("", "strict_increase"):
-        assert rows(B.window_funnel(ev, "1 hour", "ts", conds, [], mode=mode)) == rows(
+        assert _rows(B.window_funnel(ev, "1 hour", "ts", conds, [], mode=mode)) == _rows(
             B.window_funnel(ev, "1 hour", "ts", conds, ["k"], mode=mode).drop("k"))
+    for fn, pattern in (
+        (B.sequence_match, "(?1)(?2)"), (B.sequence_match, "(?1).*(?2).*(?3)"),
+        (B.sequence_match, "(?1).*(?t<=3600)(?3)"), (B.sequence_count, "(?1)(?2)"),
+        (B.sequence_count, "(?1).*(?3)"), (B.sequence_match_events, "(?1).*(?3)"),
+    ):
+        assert _rows(fn(ev, pattern, "ts", conds, [])) == _rows(
+            fn(ev, pattern, "ts", conds, ["k"]).drop("k")), (fn.__name__, pattern)
 
 
 def test_condition_bitmask_text_and_column_forms_agree(spark, sf):

@@ -527,3 +527,28 @@ def test_timestamp_ntz_column(spark, ev):
     sql = f"SELECT user_id, ts, {S} AS sid FROM sess_scope_ntz"
     got = {tuple(r) for r in behavioral_sql(spark, sql).collect()}
     assert got == _operator_rows(ntz) and len(got) == 5
+
+
+@pytest.mark.parametrize("frame", [
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW",
+    "range between unbounded preceding and current row",
+    "ROWS UNBOUNDED PRECEDING",
+    "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW",
+])
+def test_frame_in_spec_rejected(frame):
+    # the expansion sets its own frame and its lag takes none, so a
+    # user frame is named in the error instead of reaching Spark's
+    # parser as a second frame clause
+    from duckdb_behavioral_spark.sql_surface import rewrite_behavioral_sql
+
+    sql = ("SELECT sessionize(ts, INTERVAL '30 minutes') "
+           f"OVER (PARTITION BY user_id ORDER BY ts {frame}) AS sid FROM t")
+    with pytest.raises(ValueError, match=f"no window frame, got {frame.split()[0].upper()}"):
+        rewrite_behavioral_sql(sql)
+
+
+def test_key_named_like_a_frame_unit_expands(spark, ev):
+    ev.withColumnRenamed("user_id", "range").createOrReplaceTempView("sess_scope_range")
+    sql = ("SELECT range AS user_id, ts, sessionize(ts, INTERVAL '30 minutes') "
+           "OVER (PARTITION BY range ORDER BY ts) AS sid FROM sess_scope_range")
+    assert {tuple(r) for r in behavioral_sql(spark, sql).collect()} == _operator_rows(ev)

@@ -99,3 +99,32 @@ def test_retention_takes_2_to_32_conditions(spark, n):
         B.retention_col(conds)
     with pytest.raises(ValueError, match=r"2\.\.32"):
         rewrite_behavioral_sql(sql)
+
+
+@pytest.mark.parametrize("call", [
+    "window_funnel(INTERVAL '1 hour', ts, event_type = 'view', event_type = 'click', "
+    "event_type = 'purchase')",
+    "sequence_match('(?1).*(?t<=3600)(?2)', ts, event_type = 'view', "
+    "event_type = 'purchase')",
+    "sequence_count('(?1).*(?2)', ts, event_type = 'view', event_type = 'purchase')",
+    "sequence_match_events('(?1).*(?2)', ts, event_type = 'view', "
+    "event_type = 'purchase')",
+    "sequence_next_node('forward', 'first_match', ts, event_type, "
+    "event_type = 'signup', event_type = 'signup', event_type = 'view')",
+], ids=["window_funnel", "sequence_match", "sequence_count", "sequence_match_events",
+        "sequence_next_node"])
+def test_aggregate_forms_on_timestamp_ntz(spark, sql_events, call):
+    """A TIMESTAMP_NTZ ts column (parquet written with
+    isAdjustedToUTC=false) gives the TIMESTAMP column's result: the
+    rewrite reads event time through ``sqltext.event_micros``."""
+    from duckdb_behavioral_spark.sql_surface import behavioral_sql
+
+    spark.table("ev_sql").withColumn("ts", F.expr("CAST(ts AS TIMESTAMP_NTZ)")) \
+        .createOrReplaceTempView("ev_sql_ntz")
+
+    def rows(view):
+        return sorted(map(tuple, behavioral_sql(
+            spark, f"SELECT user_id, {call} AS r FROM {view} GROUP BY user_id").collect()))
+
+    want = rows("ev_sql")
+    assert want and rows("ev_sql_ntz") == want
